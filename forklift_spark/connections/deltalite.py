@@ -106,6 +106,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from forklift_spark.changelog import position_changelog
 from forklift_spark.connections.base import Connection
 from forklift_spark.functions.roaring import (
     deserialize_roaring64,
@@ -1047,52 +1048,7 @@ class DeltaLiteTable:
                 old_side = old_side.withColumn(
                     f.name, F.lit(None).cast(f.dataType))
 
-        meta = ["___path", "___pos"]
-        # ONE aggregation decides both directions (optimization r8,
-        # guide §2.1/§2.2; same fusion as the iceberglite changelog):
-        # (___path, ___pos) is unique within a side, so a group seeing
-        # both sides is a retained row (cancels) and a single-side
-        # group is that side's change — each side's live-set plan runs
-        # ONCE instead of twice. Values ride in a struct (never grouped
-        # on); a surviving group has exactly one row, so first() is
-        # deterministic.
-        sides = (
-            old_side.select(*meta, F.struct(*names).alias("___v"),
-                            F.lit(-1).alias("___s"))
-            .unionByName(new_side.select(*meta, F.struct(*names).alias("___v"),
-                                         F.lit(1).alias("___s")))
-            .groupBy(*meta)
-            .agg(F.sum("___s").alias("___s"), F.first("___v").alias("___v"))
-            .filter(F.col("___s") != 0)
-        )
-        feed = sides.select(
-            "___v.*",
-            F.when(F.col("___s") > 0, F.lit("insert"))
-             .otherwise(F.lit("delete")).alias("_change_type"))
-        if not net:
-            return feed
-        signed = feed.withColumn(
-            "___sign", F.when(F.col("_change_type") == "insert",
-                              F.lit(1)).otherwise(F.lit(-1)))
-        netted = (signed.groupBy(*names)
-                  .agg(F.sum("___sign").alias("___n"))
-                  .filter(F.col("___n") != 0))
-        # chunked replication (ADVICE r8 low, same fix as
-        # ManifestTable.changes): bound any one materialized sequence
-        # array; the common |net|=1 case pays two singleton explodes
-        _chunk = F.lit(1_000_000).cast("long")
-        _n = F.abs(F.col("___n")).cast("long")
-        return (netted
-                .withColumn("_change_type",
-                            F.when(F.col("___n") > 0, F.lit("insert"))
-                             .otherwise(F.lit("delete")))
-                .withColumn("___c", F.explode(F.sequence(
-                    F.lit(0).cast("long"),
-                    F.floor((_n - F.lit(1)) / _chunk).cast("long"))))
-                .withColumn("___i", F.explode(F.sequence(
-                    F.lit(1).cast("long"),
-                    F.least(_chunk, _n - F.col("___c") * _chunk))))
-                .select(*names, "_change_type"))
+        return position_changelog(old_side, new_side, names, net)
 
     def _deleted_positions(self, dv_files: dict[str, dict]) -> DataFrame:
         """Expand DV descriptors into a (``___path``, ``___pos``) frame

@@ -1,5 +1,10 @@
-"""Spark Python DataSource over the manifest table format: register
-once, then the format works everywhere Spark accepts a source name —
+"""Spark Python DataSources over the three lakehouse formats: one scan
+core (this module) and a thin adapter per format.
+
+    format name          adapter module          table
+    forklift_manifest    datasource.py           ManifestTable
+    deltalite            delta_datasource.py     Delta Lake log, no jar
+    iceberglite          iceberg_datasource.py   Iceberg v1/v2, no jar
 
     spark.dataSource.register(ManifestDataSource)
     spark.read.format("forklift_manifest")
@@ -8,40 +13,61 @@ once, then the format works everywhere Spark accepts a source name —
          .option("table", "events").option("cdc", "true")
          .load(warehouse_root)                                    # CDC tail
 
-This is the Spark-4-idiomatic integration layer (the Python DataSource
-API) for the format `manifest.py` implements: the BATCH reader plans
-one input partition per live data file (deletion-vector positions
-resolved at plan time, subtracted per-file with an Arrow mask — no
-join at all on this path), and the STREAM reader turns the versioned
-manifest history into a structured-streaming CDC feed — offsets are
-manifest versions, each microbatch carries the row-level changes
-(``_change_type`` 'insert' | 'delete', plus ``_commit_version``)
-between the last committed version and the head, with exactly-once
-delivery from the engine's offset log.
+Planning runs where the Python DataSource API runs it, a driver-side
+Python worker with NO SparkSession, so every adapter reads its format's
+metadata directly (stdlib + pyarrow, the table classes with
+``spark=None``). The core owns everything the formats share: the file
+part, split-size packing, the Arrow leaf, filter-bound folding, the
+stream loop and its diff emitter, and the ``cdc`` option shell. An
+adapter supplies only its metadata: how to list live files and their
+delete masks, how to walk its history, and its refusals.
 
-Planning runs where the Python DataSource API runs it — a driver-side
-Python worker with NO SparkSession — so everything here reads manifest
-JSON + parquet segment/dv sidecars directly (stdlib + pyarrow). The
-``ManifestTable`` metadata helpers are deliberately Spark-free and are
-reused with ``spark=None``.
+BATCH: one input partition per live data file. The format's delete
+mask (manifest dv sidecars, Delta deletion vectors, Iceberg position
+deletes) is resolved at plan time and subtracted per file with an Arrow
+mask, no join. Small files pack into split-size groups.
 
-Change semantics (documented, not hidden): the stream feed is
-row-exact for append commits and for dv-mode commits (``merge+dv`` /
-``delete+dv`` / ``apply-changes+dv`` — the CDC-friendly write mode):
-dv position diffs name exactly the changed rows. REWRITE-mode commits
-(plain merge/delete rewriting files) emit file-level events — a
-delete+insert pair also covers rows the rewrite carried unchanged.
-The multiset is correct and a consumer that applies each microbatch's
-deletes before its inserts (per ``_commit_version``) converges to the
-exact table state; the batch ``ManifestTable.changes()`` feed cancels
-carried rows exactly (Spark ``exceptAll``) when exact row deltas are
-required. Layout-only commits (compact / alter-layout / checkpoint /
-constraint changes) emit ZERO change rows by operation gating, same
-as the batch feed.
+STREAM: offsets are durable manifest/Delta versions or Iceberg snapshot
+ids. Each microbatch carries the row-level changes between the last
+committed offset and the head, tagged ``_change_type`` ('insert' |
+'delete') plus the adapter's version column (``_commit_version`` or
+``_commit_snapshot_id``). Change semantics, for all three formats:
+
+- Append commits and mask commits are row-exact. An added file is
+  inserts minus its mask, a removed file is deletes of its live rows, a
+  mask that grows on a kept file names exactly the deleted rows and a
+  mask that shrinks (a restore) exactly the re-inserted ones. Mask
+  commits are manifest dv-mode writes (``merge+dv`` / ``delete+dv`` /
+  ``apply-changes+dv``), Delta DV commits and Iceberg position deletes.
+- Rewrite commits (files rewritten whole) emit file-level events: a
+  delete+insert pair also covers rows the rewrite carried unchanged.
+  The multiset is correct, and a consumer that applies each
+  microbatch's deletes before its inserts (per version) converges to
+  the exact table state. The batch feeds (``ManifestTable.changes()``,
+  ``DeltaLiteTable``/``IcebergLiteTable.changelog(net=True)``) cancel
+  carried rows exactly when exact row deltas are required.
+- Layout-only manifest commits (compact / alter-layout / checkpoint /
+  constraint changes) and Delta commits whose file actions all carry
+  ``dataChange: false`` emit ZERO rows.
+- A boundary that can no longer be reconstructed (a vacuumed manifest
+  version, a cleaned Delta commit, an expired Iceberg snapshot) refuses
+  loudly rather than replaying history as duplicate inserts. Iceberg
+  equality deletes refuse too: they are value predicates, not a mask.
+
+Exactly-once on Spark 4.1: its Python DataSource API has no
+``SupportsTriggerAvailableNow``, so under ``Trigger.AvailableNow``
+Spark wraps these sources and warns that it "may not guarantee
+processing new data if there is an uncommitted batch". Delivery stays
+exactly-once because offsets are durable versions or snapshot ids: a
+restarted query re-plans an uncommitted batch from the same two offsets
+and gets the same rows. The restart tests
+``test_stream_cdc_tail_exactly_once`` (manifest and Delta) and
+``test_stream_tails_only_new_snapshots`` (Iceberg) pin this.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -61,16 +87,26 @@ _LAYOUT_ONLY_OPS = {
 
 class _FilePart(InputPartition):
     """One data file: read everything except ``drop_pos``; or, when
-    ``emit_pos`` is set, read ONLY those row indices (dv diff events).
-    ``change`` is None for batch, else ('insert'|'delete', version)."""
+    ``emit_pos`` is set, read ONLY those row indices (mask diff events).
+    ``change`` is None for batch, else ('insert'|'delete', version).
+    Adapter extras: ``pv`` maps a column to its log-recorded string
+    partition value (Delta); ``phys`` maps a column to its physical
+    parquet name (Delta columnMapping); ``id_map`` maps a parquet field
+    id to the current column name (Iceberg renames). ``nbytes`` is the
+    file size for split packing (0 when unknown)."""
 
-    def __init__(self, path, drop_pos=None, emit_pos=None, change=None,
-                 schema_json=None):
+    def __init__(self, path, nbytes=0, drop_pos=None, emit_pos=None,
+                 change=None, schema_json=None, pv=None, phys=None,
+                 id_map=None):
         self.path = path
+        self.nbytes = nbytes
         self.drop_pos = drop_pos
         self.emit_pos = emit_pos
         self.change = change
         self.schema_json = schema_json
+        self.pv = pv or {}
+        self.phys = phys or {}
+        self.id_map = id_map
 
 
 class _GroupPart(InputPartition):
@@ -134,47 +170,9 @@ def _part_files(parts: list) -> int:
     )
 
 
-def _iter_group(partition: "_GroupPart", leaf):
-    for p in partition.parts:
-        yield from leaf(p)
-
-
-def _mt(options):
-    """Spark-free ManifestTable handle for metadata access only."""
-    from forklift_spark.manifest import ManifestTable
-
-    root = options.get("path")
-    table = options.get("table")
-    if not root or not table:
-        raise ValueError(
-            "forklift_manifest needs .load(<warehouse root>) and "
-            ".option('table', <name>)")
-    return ManifestTable(None, root, table)
-
-
-def _entries(mt, version):
-    m = mt._raw(version)
-    return [dict(e) for e in mt._m_entries(m)], m
-
-
-def _dv_positions(mt, entries) -> dict[str, frozenset]:
-    """file path -> masked row positions, resolved from the dv parquet
-    sidecars (positions accumulate; duplicate pairs are deduped here)."""
-    import pyarrow.parquet as pq
-
-    dv_dirs = sorted({e["dv"] for e in entries if e.get("dv")})
-    if not dv_dirs:
-        return {}
-    want = {e["path"] for e in entries if e.get("dv")}
-    out: dict[str, set] = {}
-    for d in dv_dirs:
-        t = pq.read_table(os.path.join(mt.path, d),
-                          columns=["file_ref", "pos"])
-        for ref, pos in zip(t.column("file_ref").to_pylist(),
-                            t.column("pos").to_pylist()):
-            if ref in want:
-                out.setdefault(ref, set()).add(pos)
-    return {k: frozenset(v) for k, v in out.items()}
+def _opt_int(options, key: str):
+    v = options.get(key)
+    return int(v) if v is not None else None
 
 
 def _arrow_schema(schema_json: dict):
@@ -187,8 +185,7 @@ def _arrow_schema(schema_json: dict):
 def _collect_bounds(filters, where: dict) -> None:
     """Fold Spark's pushed comparison filters into ``where[col] =
     [lo, hi]`` interval bounds (tightest wins; incomparable values keep
-    the old bound). Shared by the manifest/delta/iceberg DataSource
-    readers — each format's own metadata planner consumes the
+    the old bound). Each format's own metadata planner consumes the
     intervals."""
     from pyspark.sql.datasource import (
         EqualTo,
@@ -226,14 +223,30 @@ def _collect_bounds(filters, where: dict) -> None:
 
 
 def _read_file_batches(part: _FilePart):
-    """Arrow-side leaf: read the parquet file, apply the position mask,
-    align to the declared schema (schema evolution: missing columns are
-    null), append CDC columns when streaming. Yields RecordBatches."""
+    """Arrow leaf: read the parquet file, resolve renamed columns by
+    field id, apply the position mask, then align to the declared
+    schema: partition values injected as constants (the spec serializes
+    them as strings; an empty string on a non-string type is null),
+    physical names mapped, narrower types cast up (the typeWidening read
+    rule), evolved-away columns null-filled. When streaming, the last
+    two declared fields are the CDC columns and are filled from
+    ``part.change``. Yields RecordBatches."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     target = _arrow_schema(json.loads(part.schema_json))
     tbl = pq.read_table(part.path)
+    if part.id_map:
+        # a file written before a column RENAME carries the old name
+        # but the same field id: resolve by id so the column is read,
+        # not null-filled
+        names = []
+        for f in tbl.schema:
+            fid = (f.metadata or {}).get(b"PARQUET:field_id")
+            cur = part.id_map.get(int(fid)) if fid is not None else None
+            names.append(cur if cur is not None else f.name)
+        if names != tbl.schema.names:
+            tbl = tbl.rename_columns(names)
     n = tbl.num_rows
     if part.emit_pos is not None:
         idx = sorted(p for p in part.emit_pos if p < n)
@@ -242,157 +255,318 @@ def _read_file_batches(part: _FilePart):
         keep = [i for i in range(n) if i not in part.drop_pos]
         if len(keep) != n:
             tbl = tbl.take(pa.array(keep, type=pa.int64()))
+    rows = tbl.num_rows
+    fields = list(target)[:-2] if part.change else list(target)
     cols = []
-    for field in target:
-        if field.name == "_change_type":
-            cols.append(pa.array([part.change[0]] * tbl.num_rows,
-                                 type=pa.string()))
-        elif field.name == "_commit_version":
-            cols.append(pa.array([part.change[1]] * tbl.num_rows,
-                                 type=pa.int64()))
-        elif field.name in tbl.column_names:
-            col = tbl.column(field.name)
+    for field in fields:
+        name = part.phys.get(field.name, field.name)
+        if field.name in part.pv:
+            v = part.pv[field.name]
+            if v is None or (v == "" and not pa.types.is_string(
+                    field.type)):
+                cols.append(pa.nulls(rows, type=field.type))
+            else:
+                cols.append(pa.array([v] * rows,
+                                     type=pa.string()).cast(field.type))
+        elif name in tbl.column_names:
+            col = tbl.column(name)
             if col.type != field.type:
                 col = col.cast(field.type)
-            cols.append(col.combine_chunks() if hasattr(col, "combine_chunks")
-                        else col)
-        else:  # evolved-away column: null-fill (same rule as _align)
-            cols.append(pa.nulls(tbl.num_rows, type=field.type))
+            cols.append(col.combine_chunks())
+        else:
+            cols.append(pa.nulls(rows, type=field.type))
+    if part.change:
+        cols.append(pa.array([part.change[0]] * rows, type=pa.string()))
+        cols.append(pa.array([part.change[1]] * rows, type=pa.int64()))
     out = pa.table(cols, schema=target)
-    for batch in out.to_batches(max_chunksize=1 << 16):
-        yield batch
+    yield from out.to_batches(max_chunksize=1 << 16)
 
 
-class _ManifestBatchReader(DataSourceReader):
-    """File-pruned batch scan. ``pushFilters`` records the predicates
-    the manifest's metadata can act on (partition tokens, per-file
-    zone maps, bucket cells, per-file blooms — all evaluated by the
-    format's own ``_entries`` planner) and returns EVERY filter back to
-    Spark: pruning here only decides which FILES to open, Spark still
-    evaluates rows, so a conservative prune is always correct."""
+def _emit(before: dict, after: dict, masks_a: dict, masks_b: dict,
+          version: int, mk) -> list:
+    """Turn one history step into change parts. ``before``/``after``
+    map file path -> file record, ``masks_*`` map path -> masked row
+    positions on that side, and ``mk(path, record, **part_kw)`` builds
+    the adapter's file part. An added file is an insert of its rows
+    minus its after-mask, a removed file a delete of its live rows; on
+    a kept file, positions masked only after are exact deletes and
+    positions masked only before (a restore) exact inserts."""
+    parts = []
+    for p in sorted(after.keys() - before.keys()):
+        parts.append(mk(p, after[p], drop_pos=masks_b.get(p),
+                        change=("insert", version)))
+    for p in sorted(before.keys() - after.keys()):
+        parts.append(mk(p, before[p], drop_pos=masks_a.get(p),
+                        change=("delete", version)))
+    for p in sorted(before.keys() & after.keys()):
+        ma = masks_a.get(p, frozenset())
+        mb = masks_b.get(p, frozenset())
+        if mb - ma:
+            parts.append(mk(p, after[p], emit_pos=mb - ma,
+                            change=("delete", version)))
+        if ma - mb:
+            parts.append(mk(p, after[p], emit_pos=ma - mb,
+                            change=("insert", version)))
+    return parts
+
+
+class _Scan:
+    """What batch and stream readers share: options, the declared
+    schema, the packing tail and ``read``. Adapters define
+    ``_handle()`` (their Spark-free table object) and
+    ``_part(handle, path, record, **part_kw)``."""
 
     def __init__(self, options, schema_json: str):
         self._options = dict(options)
         self._schema_json = schema_json
-        self._partitions_in: list | None = None  # partition-value prune
-        self._where: dict = {}  # col -> [lo, hi] zone-map bounds
 
-    def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            IsNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        mt = _mt(self._options)
-        version = self._options.get("version")
-        pcol = mt._raw(int(version) if version is not None
-                       else None).get("partition_by")
-
-        def top(attr):  # only top-level single-name columns
-            return attr[0] if len(attr) == 1 else None
-
-        def bound(col, lo=None, hi=None):
-            cur = self._where.setdefault(col, [None, None])
-            for i, v in ((0, lo), (1, hi)):
-                if v is None:
-                    continue
-                old = cur[i]
-                try:
-                    tighter = (old is None or (v > old if i == 0 else
-                                               v < old))
-                except TypeError:
-                    tighter = False  # incomparable: keep the old bound
-                if tighter:
-                    cur[i] = v
-
-        for f in filters:
-            col = top(f.attribute) if hasattr(f, "attribute") else None
-            if col is None:
-                continue
-            if isinstance(f, EqualTo):
-                if col == pcol:
-                    self._partitions_in = [f.value]
-                bound(col, lo=f.value, hi=f.value)
-            elif isinstance(f, In) and col == pcol:
-                self._partitions_in = list(f.value)
-            elif isinstance(f, IsNull) and col == pcol:
-                self._partitions_in = [None]
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                bound(col, lo=f.value)
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                bound(col, hi=f.value)
-        return filters  # Spark re-applies every predicate row-level
-
-    def partitions(self):
-        mt = _mt(self._options)
-        version = self._options.get("version")
-        v = int(version) if version is not None else None
-        where = {c: tuple(b) for c, b in self._where.items()
-                 if b != [None, None]} or None
-        entries = [dict(e) for e in mt._entries(
-            v, partitions=self._partitions_in, where=where)]
-        dv = _dv_positions(mt, entries)
-        parts = []
-        for e in entries:
-            p = _FilePart(
-                os.path.join(mt.path, e["path"]),
-                drop_pos=dv.get(e["path"]),
-                schema_json=self._schema_json,
-            )
-            p._nbytes = e.get("bytes", 0)
-            parts.append(p)
-        parts = _pack_parts(parts, lambda p: getattr(p, "_nbytes", 0))
-        return parts or [_FilePart(None, schema_json=None)]
+    @staticmethod
+    def _finish(parts: list) -> list:
+        parts = _pack_parts(parts, lambda p: p.nbytes)
+        # an empty scan is legal but the engine needs >= 1 split
+        return parts or [_FilePart(None)]
 
     def read(self, partition):
         if isinstance(partition, _GroupPart):
-            return _iter_group(partition, _read_file_batches)
+            return (b for p in partition.parts
+                    for b in _read_file_batches(p))
         if partition.path is None:
             return iter(())
         return _read_file_batches(partition)
 
 
-class _ManifestStreamReader(DataSourceStreamReader):
+class _BatchReader(_Scan, DataSourceReader):
+    """File-pruned batch scan. ``pushFilters`` records the predicates
+    the format's metadata can act on and returns EVERY filter back to
+    Spark: pruning only decides which FILES to open, Spark still
+    evaluates rows, so a conservative prune is always correct."""
+
     def __init__(self, options, schema_json: str):
-        self._options = dict(options)
-        self._schema_json = schema_json
-        mt = _mt(options)
-        start = options.get("starting_version")
-        # default: tail from the CURRENT version (only new commits),
-        # the kafka `latest` convention; starting_version replays history
+        super().__init__(options, schema_json)
+        self._where: dict = {}  # col -> [lo, hi] interval bounds
+
+    def pushFilters(self, filters):
+        _collect_bounds(filters, self._where)
+        return filters  # Spark re-applies every predicate row-level
+
+    def _bounds(self) -> dict:
+        return {c: tuple(b) for c, b in self._where.items()
+                if b != [None, None]}
+
+
+class _StreamReader(_Scan, DataSourceStreamReader):
+    """CDC tail over the format's history. Adapters define
+    ``_head(handle)`` and ``_step(handle, before_state, offset) ->
+    (after_state, diff)``, where ``diff`` is ``(before files, after
+    files, before masks, after masks)`` for ``_emit`` or None for a
+    step that provably changes no rows; optionally ``_range`` (the
+    offsets strictly after lo up to hi) and ``_begin`` (the state at
+    lo; None lets the first step load it)."""
+
+    _offset = "version"
+    _start_option = "starting_version"
+
+    def __init__(self, options, schema_json: str):
+        super().__init__(options, schema_json)
+        start = self._options.get(self._start_option)
+        # kafka `latest` convention: tail only NEW commits by default;
+        # the start option replays history from the NEXT offset on
         self._initial = (int(start) if start is not None
-                         else mt.current_version())
+                         else self._head(self._handle()))
 
     def initialOffset(self):
-        return {"version": self._initial}
+        return {self._offset: self._initial}
 
     def latestOffset(self):
-        return {"version": _mt(self._options).current_version()}
+        return {self._offset: self._head(self._handle())}
 
     def commit(self, end):
-        pass  # versions are durable on disk; nothing to release
+        pass  # offsets name durable versions; nothing to release
+
+    def _range(self, h, lo: int, hi: int):
+        return range(lo + 1, hi + 1)
+
+    def _begin(self, h, lo: int, hi: int):
+        return None
 
     def partitions(self, start, end):
-        mt = _mt(self._options)
-        parts: list[_FilePart] = []
-        for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            parts.extend(self._diff_one(mt, v))
-        parts = _pack_parts(parts, lambda p: getattr(p, "_nbytes", 0))
-        # an empty microbatch is legal but the engine needs >= 1 split
-        return parts or [_FilePart(None, schema_json=None)]
+        h = self._handle()
+        lo, hi = int(start[self._offset]), int(end[self._offset])
+        steps = self._range(h, lo, hi)
+        # one walk over the range: each step's after-state is the next
+        # step's before-state, so no version is decoded twice
+        state = self._begin(h, lo, hi) if steps else None
+        mk = functools.partial(self._part, h)
+        parts: list = []
+        for v in steps:
+            state, diff = self._step(h, state, v)
+            if diff is not None:
+                parts.extend(_emit(*diff, v, mk))
+        return self._finish(parts)
 
-    def _diff_one(self, mt, v: int) -> list[_FilePart]:
+
+class _CdcSource(DataSource):
+    """The ``cdc`` option shell: batch reads the table, ``cdc=true``
+    streams change events with two appended columns. Adapters set the
+    reader classes, ``_version_col``, the wording of the refusals and
+    ``_table_schema()``."""
+
+    _version_col = "_commit_version"
+
+    def _cdc(self) -> bool:
+        return str(self.options.get("cdc", "")).lower() == "true"
+
+    def schema(self):
+        from pyspark.sql.types import (
+            LongType,
+            StringType,
+            StructField,
+            StructType,
+        )
+
+        base = self._table_schema()
+        if not self._cdc():
+            return base
+        return StructType(
+            base.fields
+            + [StructField("_change_type", StringType(), False),
+               StructField(self._version_col, LongType(), False)])
+
+    def reader(self, schema):
+        if self._cdc():
+            raise ValueError(
+                "cdc=true is a streaming option; use spark.readStream "
+                f"(batch change feeds: {self._batch_feed})")
+        return self._batch_reader(
+            self.options, json.dumps(self._table_schema().jsonValue()))
+
+    def streamReader(self, schema):
+        if not self._cdc():
+            raise ValueError(
+                f"streaming {self._what} requires .option('cdc', 'true'): "
+                f"the feed carries _change_type/{self._version_col} "
+                "change events, not a table snapshot")
+        return self._stream_reader(self.options, json.dumps(
+            self.schema().jsonValue()))
+
+
+# --------------------------------------------------------------------------
+# manifest adapter
+# --------------------------------------------------------------------------
+
+
+def _mt(options):
+    """Spark-free ManifestTable handle for metadata access only."""
+    from forklift_spark.manifest import ManifestTable
+
+    root = options.get("path")
+    table = options.get("table")
+    if not root or not table:
+        raise ValueError(
+            "forklift_manifest needs .load(<warehouse root>) and "
+            ".option('table', <name>)")
+    return ManifestTable(None, root, table)
+
+
+def _dv_positions(mt, entries) -> dict[str, frozenset]:
+    """file path -> masked row positions, resolved from the dv parquet
+    sidecars (positions accumulate; duplicate pairs are deduped here)."""
+    import pyarrow.parquet as pq
+
+    dv_dirs = sorted({e["dv"] for e in entries if e.get("dv")})
+    if not dv_dirs:
+        return {}
+    want = {e["path"] for e in entries if e.get("dv")}
+    out: dict[str, set] = {}
+    for d in dv_dirs:
+        t = pq.read_table(os.path.join(mt.path, d),
+                          columns=["file_ref", "pos"])
+        for ref, pos in zip(t.column("file_ref").to_pylist(),
+                            t.column("pos").to_pylist()):
+            if ref in want:
+                out.setdefault(ref, set()).add(pos)
+    return {k: frozenset(v) for k, v in out.items()}
+
+
+class _ManifestScan:
+    def _handle(self):
+        return _mt(self._options)
+
+    def _part(self, mt, path, e, **kw) -> _FilePart:
+        return _FilePart(os.path.join(mt.path, path), nbytes=e.get("bytes", 0),
+                         schema_json=self._schema_json, **kw)
+
+
+class _ManifestBatchReader(_ManifestScan, _BatchReader):
+    """Besides the interval bounds (per-file zone maps, bucket cells,
+    blooms), equality / IN / IS NULL on the partition column prune
+    whole partitions in the manifest's own ``_entries`` planner."""
+
+    _partitions_in: list | None = None  # partition-value prune
+
+    def pushFilters(self, filters):
+        from pyspark.sql.datasource import EqualTo, In, IsNull
+
+        pcol = self._handle()._raw(
+            _opt_int(self._options, "version")).get("partition_by")
+        for f in filters:
+            if tuple(getattr(f, "attribute", ())) != (pcol,):
+                continue
+            if isinstance(f, EqualTo):
+                self._partitions_in = [f.value]
+            elif isinstance(f, In):
+                self._partitions_in = list(f.value)
+            elif isinstance(f, IsNull):
+                self._partitions_in = [None]
+        return super().pushFilters(filters)
+
+    def partitions(self):
+        mt = self._handle()
+        entries = [dict(e) for e in mt._entries(
+            _opt_int(self._options, "version"),
+            partitions=self._partitions_in, where=self._bounds() or None)]
+        dv = _dv_positions(mt, entries)
+        return self._finish([self._part(mt, e["path"], e,
+                                        drop_pos=dv.get(e["path"]))
+                             for e in entries])
+
+
+class _ManifestStreamReader(_ManifestScan, _StreamReader):
+    """Steps are manifest versions; the carried state is the previous
+    version's raw manifest JSON. Only segments NOT shared by the two
+    adjacent manifests are parsed, so tail planning is O(changed
+    files), flat in history depth."""
+
+    def _head(self, mt):
+        return mt.current_version()
+
+    def _step(self, mt, a_raw, v: int):
         b_raw = mt._raw(v)
         op = (b_raw.get("operation") or "").split("(")[0]
         if op in _LAYOUT_ONLY_OPS:
-            return []  # row multiset provably unchanged
+            return b_raw, None  # row multiset provably unchanged
+        if a_raw is None:
+            a_raw = self._predecessor(mt, v)
+
+        def delta(m, other):
+            if "entries" in m or "entries" in other:
+                return mt._m_entries(m)
+            shared = {s["path"] for s in other["segments"]}
+            es = []
+            for s in m["segments"]:
+                if s["path"] not in shared:
+                    es.extend(mt._load_segment(s["path"]))
+            return es
+
+        ea = {e["path"]: e for e in delta(a_raw, b_raw)}
+        eb = {e["path"]: e for e in delta(b_raw, a_raw)}
+        return b_raw, (ea, eb, _dv_positions(mt, list(ea.values())),
+                       _dv_positions(mt, list(eb.values())))
+
+    @staticmethod
+    def _predecessor(mt, v: int) -> dict:
         try:
-            a_raw = mt._raw(v - 1)
+            return mt._raw(v - 1)
         except KeyError:
             if v - 1 >= 1:
                 # the predecessor EXISTED and was vacuumed away: the CDC
@@ -410,99 +584,23 @@ class _ManifestStreamReader(DataSourceStreamReader):
                 ) from None
             # true genesis (v == 1, the create commit; there is no v0):
             # everything live at v is an insert
-            a_raw = {"entries": [], "segments": []}
-
-        def delta(m, other):
-            if "entries" in m or "entries" in other:
-                return mt._m_entries(m)
-            shared = {s["path"] for s in other["segments"]}
-            es = []
-            for s in m["segments"]:
-                if s["path"] not in shared:
-                    es.extend(mt._load_segment(s["path"]))
-            return es
-
-        ea = {e["path"]: e for e in delta(a_raw, b_raw)}
-        eb = {e["path"]: e for e in delta(b_raw, a_raw)}
-        dv_a = _dv_positions(mt, list(ea.values()))
-        dv_b = _dv_positions(mt, list(eb.values()))
-        sj = self._schema_json
-
-        def mk(p, e, **kw) -> _FilePart:
-            fp = _FilePart(os.path.join(mt.path, p), schema_json=sj, **kw)
-            fp._nbytes = (e or {}).get("bytes", 0)
-            return fp
-
-        parts: list[_FilePart] = []
-        for p, e in eb.items():  # added files -> inserts (minus dv at v)
-            if p not in ea:
-                parts.append(mk(p, e, drop_pos=dv_b.get(p),
-                               change=("insert", v)))
-        for p, e in ea.items():  # removed files -> deletes (live rows at v-1)
-            if p not in eb:
-                parts.append(mk(p, e, drop_pos=dv_a.get(p),
-                               change=("delete", v)))
-        for p in set(ea) & set(eb):  # dv churn on a kept file: exact rows
-            pa_, pb_ = dv_a.get(p, frozenset()), dv_b.get(p, frozenset())
-            if pb_ - pa_:
-                parts.append(mk(p, eb[p], emit_pos=pb_ - pa_,
-                               change=("delete", v)))
-            if pa_ - pb_:  # restore of previously-masked rows
-                parts.append(mk(p, ea[p], emit_pos=pa_ - pb_,
-                               change=("insert", v)))
-        return parts
-
-    def read(self, partition):
-        if isinstance(partition, _GroupPart):
-            return _iter_group(partition, _read_file_batches)
-        if partition.path is None:
-            return iter(())
-        return _read_file_batches(partition)
+            return {"entries": [], "segments": []}
 
 
-class ManifestDataSource(DataSource):
+class ManifestDataSource(_CdcSource):
     """format name: ``forklift_manifest`` (see module docstring)."""
+
+    _batch_reader = _ManifestBatchReader
+    _stream_reader = _ManifestStreamReader
+    _batch_feed = "ManifestTable.changes()"
+    _what = "the manifest format"
 
     @classmethod
     def name(cls):
         return "forklift_manifest"
 
-    def _table_schema_json(self) -> dict:
-        mt = _mt(self.options)
-        version = self.options.get("version")
-        m = mt._raw(int(version) if version is not None else None)
-        return m["schema"]
+    def _table_schema(self):
+        from pyspark.sql.types import StructType
 
-    def schema(self):
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        base = StructType.fromJson(self._table_schema_json())
-        if str(self.options.get("cdc", "")).lower() == "true":
-            base = StructType(
-                base.fields
-                + [StructField("_change_type", StringType(), False),
-                   StructField("_commit_version", LongType(), False)]
-            )
-        return base
-
-    def reader(self, schema):
-        if str(self.options.get("cdc", "")).lower() == "true":
-            raise ValueError(
-                "cdc=true is a streaming option; use spark.readStream "
-                "(batch change feeds: ManifestTable.changes())")
-        return _ManifestBatchReader(
-            self.options, json.dumps(self._table_schema_json()))
-
-    def streamReader(self, schema):
-        if str(self.options.get("cdc", "")).lower() != "true":
-            raise ValueError(
-                "streaming the manifest format requires "
-                ".option('cdc', 'true'): the feed carries _change_type/"
-                "_commit_version change events, not a table snapshot")
-        return _ManifestStreamReader(self.options, json.dumps(
-            self.schema().jsonValue()))
+        m = _mt(self.options)._raw(_opt_int(self.options, "version"))
+        return StructType.fromJson(m["schema"])

@@ -1,35 +1,22 @@
-"""Spark Python DataSource over Delta Lake tables (no delta jar):
+"""``deltalite``: the Delta Lake adapter over the scan core in
+``datasource.py`` (no delta jar; change semantics, offsets and the
+exactly-once note live in that module's docstring):
 
     spark.dataSource.register(DeltaLiteDataSource)
     spark.read.format("deltalite").load(table_path)            # batch
     spark.readStream.format("deltalite")
          .option("cdc", "true").load(table_path)               # CDC tail
 
-The BATCH reader plans one input partition per live logical file —
-deletion-vector positions resolved at plan time from the log's DV
-descriptors (pure-Python roaring decode) and subtracted per-file with
-an Arrow mask; partition-column values (which Delta stores ONLY in the
-log, never in the data files) are injected as constant Arrow columns.
-The STREAM reader turns the version history into a structured-streaming
-CDC feed: offsets are Delta versions, each microbatch carries the
-row-level changes (``_change_type`` 'insert'|'delete' +
-``_commit_version``) between the last committed version and the head —
-the streaming twin of ``DeltaLiteTable.changelog()`` and the Delta
-counterpart of the manifest format's CDC source (``datasource.py``).
-
-Planning runs in the Python DataSource driver worker with NO
-SparkSession, so everything here replays the ``_delta_log`` JSON
-directly (``DeltaLiteTable`` with ``spark=None``); a log whose early
-commits were cleaned past a parquet checkpoint refuses loudly for
-streaming (the JSON replay is the only Spark-free path) — batch reads
-of such tables go through ``DeltaLiteTable.read()`` instead.
-
-Change semantics match the manifest stream source: append commits and
-DV commits are row-exact (DV position diffs name exactly the changed
-rows); rewrite commits emit file-level delete+insert events whose
-multiset is correct (a consumer applying each microbatch's deletes
-before its inserts converges to the table state); commits whose file
-actions all carry ``dataChange: false`` (compaction) emit ZERO rows.
+What is Delta-specific: the snapshot replays the ``_delta_log`` JSON
+directly (``DeltaLiteTable`` with ``spark=None``), so a log whose early
+commits were cleaned past a parquet checkpoint refuses loudly (batch
+reads of such tables go through ``DeltaLiteTable.read()``). Deletion
+vectors decode from the log's descriptors (pure-Python roaring).
+Partition values, which Delta stores only in the log, are injected by
+the Arrow leaf, and columnMapping tables map logical to physical
+names. The stream walks commit JSON files one by one; commits whose
+file actions all carry ``dataChange: false`` emit zero rows. This is
+the streaming twin of ``DeltaLiteTable.changelog()``.
 
 Reference analog: the incremental-consumption contract (S2,
 `transports/mysql.rb:149-158`) as a live stream. Spec shapes from
@@ -42,31 +29,13 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
+from forklift_spark.datasource import (
+    _BatchReader,
+    _CdcSource,
+    _FilePart,
+    _opt_int,
+    _StreamReader,
 )
-
-
-class _DeltaFilePart(InputPartition):
-    """One logical file: read everything except ``drop_pos``; or, when
-    ``emit_pos`` is set, ONLY those row indices (dv diff events).
-    ``pv`` maps LOGICAL partition column -> log-recorded string value;
-    ``phys`` maps logical data column -> physical parquet name for
-    columnMapping tables (None = names match).
-    ``change`` is None for batch, else ('insert'|'delete', version)."""
-
-    def __init__(self, path, pv=None, drop_pos=None, emit_pos=None,
-                 change=None, schema_json=None, phys=None):
-        self.path = path
-        self.pv = pv or {}
-        self.drop_pos = drop_pos
-        self.emit_pos = emit_pos
-        self.change = change
-        self.schema_json = schema_json
-        self.phys = phys
 
 
 def _table(options):
@@ -166,151 +135,60 @@ def _dv_sets(t, files: dict) -> dict[str, frozenset]:
     return out
 
 
-def _read_delta_batches(part: _DeltaFilePart):
-    """Arrow leaf: read the file, apply the position mask, align to the
-    declared schema (missing columns null-filled, narrower physical
-    types cast up — the typeWidening read rule), inject partition
-    values and CDC columns as constants."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+class _DeltaScan:
+    """``_cm``: ``_cm_maps()`` of the planned snapshot, set by each
+    reader before it builds a part."""
 
-    from forklift_spark.datasource import _arrow_schema
+    def _handle(self):
+        return _table(self._options)
 
-    target = _arrow_schema(json.loads(part.schema_json))
-    tbl = pq.read_table(part.path)
-    n = tbl.num_rows
-    if part.emit_pos is not None:
-        idx = sorted(p for p in part.emit_pos if p < n)
-        tbl = tbl.take(pa.array(idx, type=pa.int64()))
-    elif part.drop_pos:
-        keep = [i for i in range(n) if i not in part.drop_pos]
-        if len(keep) != n:
-            tbl = tbl.take(pa.array(keep, type=pa.int64()))
-    rows = tbl.num_rows
-    cols = []
-    for field in target:
-        if field.name == "_change_type":
-            cols.append(pa.array([part.change[0]] * rows,
-                                 type=pa.string()))
-        elif field.name == "_commit_version":
-            cols.append(pa.array([part.change[1]] * rows,
-                                 type=pa.int64()))
-        elif field.name in part.pv:
-            v = part.pv[field.name]
-            if v is None or (v == "" and not pa.types.is_string(
-                    field.type)):
-                cols.append(pa.nulls(rows, type=field.type))
-            else:  # spec: partition values serialize as strings
-                cols.append(pa.array([v] * rows,
-                                     type=pa.string()).cast(field.type))
-        elif (fname := (part.phys or {}).get(field.name, field.name)) \
-                in tbl.column_names:
-            col = tbl.column(fname)
-            if col.type != field.type:
-                col = col.cast(field.type)
-            cols.append(col.combine_chunks()
-                        if hasattr(col, "combine_chunks") else col)
-        else:
-            cols.append(pa.nulls(rows, type=field.type))
-    out = pa.table(cols, schema=target)
-    for batch in out.to_batches(max_chunksize=1 << 16):
-        yield batch
+    def _part(self, t, path, e, **kw) -> _FilePart:
+        phys, pcols, pv_key = self._cm
+        return _FilePart(
+            os.path.join(t.path, path), nbytes=e.get("size") or 0,
+            pv=_pv_logical(e.get("pv") or {}, pcols, pv_key), phys=phys,
+            schema_json=self._schema_json, **kw)
 
 
-class _DeltaBatchReader(DataSourceReader):
-    def __init__(self, options, schema_json: str):
-        self._options = dict(options)
-        self._schema_json = schema_json
-        self._where: dict = {}  # col -> [lo, hi] interval bounds
-
-    def pushFilters(self, filters):
-        """Record interval predicates the log's own metadata can act on
-        (partition values + add.stats bounds via
-        ``DeltaLiteTable._prune_files``) and hand EVERY filter back to
-        Spark — pruning only decides which FILES to open, rows are
-        still filtered engine-side, so a conservative prune is always
-        correct. Same contract as the manifest source's pushFilters."""
-        from forklift_spark.datasource import _collect_bounds
-
-        _collect_bounds(filters, self._where)
-        return filters
+class _DeltaBatchReader(_DeltaScan, _BatchReader):
+    """Interval bounds prune on partition values and ``add.stats``
+    through ``DeltaLiteTable._prune_files``."""
 
     def partitions(self):
-        t = _table(self._options)
-        version = self._options.get("version")
-        snap = _snap_or_refuse(
-            t, int(version) if version is not None else None)
-        where = {c: tuple(b) for c, b in self._where.items()
-                 if b != [None, None]}
+        t = self._handle()
+        snap = _snap_or_refuse(t, _opt_int(self._options, "version"))
+        where = self._bounds()
         if where:
-            snap = dict(snap)
-            snap["files"] = t._prune_files(snap, where)
-        phys, pcols, pv_key = _cm_maps(snap)
+            snap = {**snap, "files": t._prune_files(snap, where)}
+        self._cm = _cm_maps(snap)
         dv = _dv_sets(t, snap["files"])
-        from forklift_spark.datasource import _pack_parts
-
-        parts = []
-        for p, e in sorted(snap["files"].items()):
-            fp = _DeltaFilePart(
-                os.path.join(t.path, p),
-                pv=_pv_logical(e.get("pv") or {}, pcols, pv_key),
-                drop_pos=dv.get(p), schema_json=self._schema_json,
-                phys=phys)
-            fp._nbytes = e.get("size") or 0
-            parts.append(fp)
-        parts = _pack_parts(parts, lambda p: getattr(p, "_nbytes", 0))
-        return parts or [_DeltaFilePart(None, schema_json=None)]
-
-    def read(self, partition):
-        from forklift_spark.datasource import _GroupPart, _iter_group
-
-        if isinstance(partition, _GroupPart):
-            return _iter_group(partition, _read_delta_batches)
-        if partition.path is None:
-            return iter(())
-        return _read_delta_batches(partition)
+        return self._finish([self._part(t, p, e, drop_pos=dv.get(p))
+                             for p, e in sorted(snap["files"].items())])
 
 
-class _DeltaStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema_json: str):
-        self._options = dict(options)
-        self._schema_json = schema_json
-        t = _table(options)
-        start = options.get("starting_version")
-        # kafka `latest` convention: tail only NEW commits by default;
-        # starting_version replays history from the NEXT version on
-        self._initial = (int(start) if start is not None
-                         else t.latest_version())
+def _changed(files: dict, other: dict) -> dict:
+    """Files of ``files`` that are absent from ``other`` or carry a
+    different deletion vector there: the only ones whose DV is decoded."""
+    return {p: e for p, e in files.items()
+            if p not in other or other[p].get("dv") != e.get("dv")}
 
-    def initialOffset(self):
-        return {"version": self._initial}
 
-    def latestOffset(self):
-        return {"version": _table(self._options).latest_version()}
+class _DeltaStreamReader(_DeltaScan, _StreamReader):
+    """Steps are commit versions; the carried state is the replayed
+    file set, rolled forward commit by commit (O(range), not
+    O(range x history))."""
 
-    def commit(self, end):
-        pass  # versions are durable on disk; nothing to release
+    def _head(self, t):
+        return t.latest_version()
 
-    def partitions(self, start, end):
-        t = _table(self._options)
-        lo, hi = int(start["version"]), int(end["version"])
+    def _begin(self, t, lo: int, hi: int) -> dict:
         # columnMapping resolution under the END state (the stream's
         # declared schema is fixed at start; mid-range cm upgrades are
         # not replayed per-commit)
         self._cm = _cm_maps(_snap_or_refuse(t, hi))
-        # one replay to the range start, then roll forward commit by
-        # commit — O(range), not O(range x history)
-        files = (_snap_or_refuse(t, lo)["files"] if lo >= 0 else {})
-        parts: list[_DeltaFilePart] = []
-        for v in range(lo + 1, hi + 1):
-            files, new_parts = self._diff_one(t, v, files)
-            parts.extend(new_parts)
-        from forklift_spark.datasource import _pack_parts
+        return _snap_or_refuse(t, lo)["files"] if lo >= 0 else {}
 
-        parts = _pack_parts(parts, lambda p: getattr(p, "_nbytes", 0))
-        return parts or [_DeltaFilePart(None, schema_json=None)]
-
-    def _diff_one(self, t, v: int, files: dict):
+    def _step(self, t, before: dict, v: int):
         adds, removes, data_change = [], [], False
         fp = os.path.join(t.log_dir, f"{v:020d}.json")
         if not os.path.exists(fp):
@@ -335,106 +213,29 @@ class _DeltaStreamReader(DataSourceStreamReader):
                         data_change = True
                 elif "protocol" in act:
                     t._check_protocol(act["protocol"])
-        before = dict(files)
-        t._reconcile_commit(files, adds, removes)
+        after = dict(before)
+        t._reconcile_commit(after, adds, removes)
         if not data_change:
-            return files, []  # compaction: row multiset unchanged
-        dv_a = _dv_sets(t, {p: e for p, e in before.items()
-                            if p not in files
-                            or files[p].get("dv") != e.get("dv")})
-        dv_b = _dv_sets(t, {p: e for p, e in files.items()
-                            if p not in before
-                            or before[p].get("dv") != e.get("dv")})
-        sj = self._schema_json
-        phys, pcols, pv_key = self._cm
-
-        def _pv(e):
-            return _pv_logical(e.get("pv") or {}, pcols, pv_key)
-
-        def mk(p, e, **kw) -> _DeltaFilePart:
-            fp = _DeltaFilePart(
-                os.path.join(t.path, p), phys=phys, schema_json=sj, **kw)
-            fp._nbytes = (e or {}).get("size") or 0
-            return fp
-
-        parts: list[_DeltaFilePart] = []
-        for p, e in sorted(files.items()):  # added -> inserts
-            if p not in before:
-                parts.append(mk(p, e, pv=_pv(e), drop_pos=dv_b.get(p),
-                               change=("insert", v)))
-        for p, e in sorted(before.items()):  # removed -> deletes
-            if p not in files:
-                parts.append(mk(p, e, pv=_pv(e), drop_pos=dv_a.get(p),
-                               change=("delete", v)))
-        for p in sorted(set(before) & set(files)):  # dv churn: exact rows
-            if before[p].get("dv") == files[p].get("dv"):
-                continue
-            pa_ = dv_a.get(p, frozenset())
-            pb_ = dv_b.get(p, frozenset())
-            pv = _pv(files[p])
-            if pb_ - pa_:
-                parts.append(mk(p, files[p], pv=pv, emit_pos=pb_ - pa_,
-                               change=("delete", v)))
-            if pa_ - pb_:  # restore of previously-masked rows
-                parts.append(mk(p, files[p], pv=pv, emit_pos=pa_ - pb_,
-                               change=("insert", v)))
-        return files, parts
-
-    def read(self, partition):
-        from forklift_spark.datasource import _GroupPart, _iter_group
-
-        if isinstance(partition, _GroupPart):
-            return _iter_group(partition, _read_delta_batches)
-        if partition.path is None:
-            return iter(())
-        return _read_delta_batches(partition)
+            return after, None  # compaction: row multiset unchanged
+        return after, (before, after,
+                       _dv_sets(t, _changed(before, after)),
+                       _dv_sets(t, _changed(after, before)))
 
 
-class DeltaLiteDataSource(DataSource):
+class DeltaLiteDataSource(_CdcSource):
     """format name: ``deltalite`` (see module docstring)."""
+
+    _batch_reader = _DeltaBatchReader
+    _stream_reader = _DeltaStreamReader
+    _batch_feed = "DeltaLiteTable.changelog()"
+    _what = "a Delta table through deltalite"
 
     @classmethod
     def name(cls):
         return "deltalite"
 
-    def _snap(self):
-        t = _table(self.options)
-        version = self.options.get("version")
-        return _snap_or_refuse(
-            t, int(version) if version is not None else None)
-
-    def schema(self):
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        snap = self._snap()
+    def _table_schema(self):
+        snap = _snap_or_refuse(_table(self.options),
+                               _opt_int(self.options, "version"))
         _cm_maps(snap)  # nested-cm refusal surfaces at load time
-        base: StructType = snap["schema"]
-        if str(self.options.get("cdc", "")).lower() == "true":
-            base = StructType(
-                base.fields
-                + [StructField("_change_type", StringType(), False),
-                   StructField("_commit_version", LongType(), False)]
-            )
-        return base
-
-    def reader(self, schema):
-        if str(self.options.get("cdc", "")).lower() == "true":
-            raise ValueError(
-                "cdc=true is a streaming option; use spark.readStream "
-                "(batch change feeds: DeltaLiteTable.changelog())")
-        return _DeltaBatchReader(
-            self.options, json.dumps(self._snap()["schema"].jsonValue()))
-
-    def streamReader(self, schema):
-        if str(self.options.get("cdc", "")).lower() != "true":
-            raise ValueError(
-                "streaming a Delta table through deltalite requires "
-                ".option('cdc', 'true'): the feed carries _change_type/"
-                "_commit_version change events, not a table snapshot")
-        return _DeltaStreamReader(self.options, json.dumps(
-            self.schema().jsonValue()))
+        return snap["schema"]

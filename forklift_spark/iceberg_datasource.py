@@ -1,68 +1,38 @@
-"""Spark Python DataSource over Iceberg v1/v2 tables (no iceberg jar):
+"""``iceberglite``: the Iceberg v1/v2 adapter over the scan core in
+``datasource.py`` (no iceberg jar; change semantics, offsets and the
+exactly-once note live in that module's docstring):
 
     spark.dataSource.register(IcebergLiteDataSource)
     spark.read.format("iceberglite").load(table_path)          # batch
     spark.readStream.format("iceberglite")
          .option("cdc", "true").load(table_path)               # CDC tail
 
-The BATCH reader plans one input partition per live data file, with
-position-delete masks resolved at plan time (the delete files' own
-``file_path``/``pos`` columns, read with pyarrow under the spec's
-sequence-number rule: a delete applies to data files with data
-sequence number <= the delete's). The STREAM reader turns the snapshot
-history into a structured-streaming CDC feed: offsets are snapshot
-ids, each microbatch carries the row-level changes (``_change_type``
-'insert'|'delete' + ``_commit_snapshot_id``) between consecutive
-snapshots — the streaming twin of ``IcebergLiteTable.changelog()`` and
-the Iceberg counterpart of the manifest and deltalite sources.
-
-Planning runs in the Python DataSource driver worker with NO
-SparkSession — possible because the whole metadata path
-(metadata.json + Avro manifest lists/manifests) decodes through the
-repo's pure-Python Avro codec (``IcebergLiteTable`` with
-``spark=None``). EQUALITY deletes refuse loudly in both modes: their
-targets are value predicates that belong in the full reader
-(``IcebergLiteTable.read()``), not an Arrow position mask.
-
-Change semantics match the sibling sources: appended files are
-inserts, removed files are deletes of their previously-live rows,
-position-delete churn on retained files emits exactly the changed
-rows; an expired (vacuumed) boundary snapshot refuses loudly rather
-than re-emitting history. Spec shapes from the Iceberg table spec
-(v2): sequence-number inheritance, position-delete application.
+What is Iceberg-specific: the whole metadata path (metadata.json + Avro
+manifest lists/manifests) decodes through the repo's pure-Python Avro
+codec (``IcebergLiteTable`` with ``spark=None``). Position-delete masks
+come from the delete files' own ``file_path``/``pos`` columns under the
+spec's sequence-number rule (a delete applies to data files with data
+sequence number <= the delete's). The Arrow leaf resolves renamed
+columns by parquet field id. EQUALITY deletes refuse loudly in both
+modes: their targets are value predicates that belong in the full
+reader (``IcebergLiteTable.read()``), not an Arrow position mask.
+Stream offsets are snapshot ids, with a genesis sentinel for "before
+the first snapshot"; this is the streaming twin of
+``IcebergLiteTable.changelog()``. Spec shapes from the Iceberg table
+spec (v2): sequence-number inheritance, position-delete application.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
+from forklift_spark.datasource import (
+    _BatchReader,
+    _CdcSource,
+    _FilePart,
+    _opt_int,
+    _StreamReader,
 )
 
 _GENESIS = 0  # offset sentinel: "before the first snapshot"
-
-
-class _IcePart(InputPartition):
-    """``id_map``: field-id -> CURRENT column name; the Arrow leaf
-    renames file columns whose footer ``PARQUET:field_id`` resolves to
-    a different current name — Iceberg's field-id resolution for
-    renamed columns, free here because the leaf opens the file
-    anyway (the full reader's ``resolve='id'`` is opt-in because it
-    costs an extra footer read per file at plan time)."""
-
-    def __init__(self, path, drop_pos=None, emit_pos=None, change=None,
-                 schema_json=None, id_map=None):
-        self.path = path
-        self.drop_pos = drop_pos
-        self.emit_pos = emit_pos
-        self.change = change
-        self.schema_json = schema_json
-        self.id_map = id_map
 
 
 def _table(options):
@@ -108,129 +78,57 @@ def _pos_masks(t, inv) -> dict[str, frozenset]:
     return {k: frozenset(v) for k, v in out.items()}
 
 
-def _read_ice_batches(part: _IcePart):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+class _IceScan:
+    """``_id_map``: field-id -> CURRENT column name of the planned
+    snapshot. The leaf renames file columns whose footer
+    ``PARQUET:field_id`` resolves to a different current name —
+    Iceberg's field-id resolution for renamed columns, free here
+    because the leaf opens the file anyway (the full reader's
+    ``resolve='id'`` is opt-in because it costs an extra footer read
+    per file at plan time)."""
 
-    from forklift_spark.datasource import _arrow_schema
+    def _handle(self):
+        return _table(self._options)
 
-    target = _arrow_schema(json.loads(part.schema_json))
-    tbl = pq.read_table(part.path)
-    if part.id_map:
-        # field-id resolution: a file written before a column RENAME
-        # carries the old name but the same field id — resolve by id so
-        # the column is read, not null-filled
-        names = []
-        for f in tbl.schema:
-            fid = (f.metadata or {}).get(b"PARQUET:field_id")
-            cur = part.id_map.get(int(fid)) if fid is not None else None
-            names.append(cur if cur is not None else f.name)
-        if names != tbl.schema.names:
-            tbl = tbl.rename_columns(names)
-    n = tbl.num_rows
-    if part.emit_pos is not None:
-        idx = sorted(p for p in part.emit_pos if p < n)
-        tbl = tbl.take(pa.array(idx, type=pa.int64()))
-    elif part.drop_pos:
-        keep = [i for i in range(n) if i not in part.drop_pos]
-        if len(keep) != n:
-            tbl = tbl.take(pa.array(keep, type=pa.int64()))
-    rows = tbl.num_rows
-    cols = []
-    for field in target:
-        if field.name == "_change_type":
-            cols.append(pa.array([part.change[0]] * rows,
-                                 type=pa.string()))
-        elif field.name == "_commit_snapshot_id":
-            cols.append(pa.array([part.change[1]] * rows,
-                                 type=pa.int64()))
-        elif field.name in tbl.column_names:
-            col = tbl.column(field.name)
-            if col.type != field.type:
-                col = col.cast(field.type)
-            cols.append(col.combine_chunks()
-                        if hasattr(col, "combine_chunks") else col)
-        else:  # schema evolution: null-fill
-            cols.append(pa.nulls(rows, type=field.type))
-    out = pa.table(cols, schema=target)
-    for batch in out.to_batches(max_chunksize=1 << 16):
-        yield batch
+    def _part(self, t, path, f, **kw) -> _FilePart:
+        return _FilePart(path, nbytes=f.get("bytes") or 0,
+                         schema_json=self._schema_json,
+                         id_map=self._id_map, **kw)
+
+    def _resolve_ids(self, inv) -> None:
+        self._id_map = {int(f["id"]): f["name"]
+                        for f in inv["schema_json"]["fields"]}
 
 
-class _IceBatchReader(DataSourceReader):
-    def __init__(self, options, schema_json: str):
-        self._options = dict(options)
-        self._schema_json = schema_json
-        self._where: dict = {}  # col -> [lo, hi] interval bounds
-
-    def pushFilters(self, filters):
-        """Record interval predicates the manifests' metadata can act
-        on (value bounds + hidden-partition transforms via
-        ``IcebergLiteTable._prune_data_files``) and hand EVERY filter
-        back to Spark — pruning only decides which FILES to open, rows
-        are still filtered engine-side, so a conservative prune is
-        always correct."""
-        from forklift_spark.datasource import _collect_bounds
-
-        _collect_bounds(filters, self._where)
-        return filters
+class _IceBatchReader(_IceScan, _BatchReader):
+    """Interval bounds prune on value bounds and hidden-partition
+    transforms through ``IcebergLiteTable._prune_data_files``."""
 
     def partitions(self):
-        t = _table(self._options)
-        sid = self._options.get("snapshot_id")
-        inv = t.file_inventory(int(sid) if sid is not None else None)
+        t = self._handle()
+        inv = t.file_inventory(_opt_int(self._options, "snapshot_id"))
         _refuse_eq(inv, "iceberglite batch scan")
-        where = {c: tuple(b) for c, b in self._where.items()
-                 if b != [None, None]}
+        where = self._bounds()
         if where:
             t._prune_data_files(inv, where)  # prunes inv in place
         masks = _pos_masks(t, inv)
-        id_map = {int(f["id"]): f["name"]
-                  for f in inv["schema_json"]["fields"]}
-        from forklift_spark.datasource import _pack_parts
-
-        parts = []
-        for f in sorted(inv["data"], key=lambda f: f["path"]):
-            fp = _IcePart(f["path"], drop_pos=masks.get(f["path"]),
-                          schema_json=self._schema_json, id_map=id_map)
-            fp._nbytes = f.get("bytes") or 0
-            parts.append(fp)
-        parts = _pack_parts(parts, lambda p: getattr(p, "_nbytes", 0))
-        return parts or [_IcePart(None, schema_json=None)]
-
-    def read(self, partition):
-        from forklift_spark.datasource import _GroupPart, _iter_group
-
-        if isinstance(partition, _GroupPart):
-            return _iter_group(partition, _read_ice_batches)
-        if partition.path is None:
-            return iter(())
-        return _read_ice_batches(partition)
+        self._resolve_ids(inv)
+        return self._finish([
+            self._part(t, f["path"], f, drop_pos=masks.get(f["path"]))
+            for f in sorted(inv["data"], key=lambda f: f["path"])])
 
 
-class _IceStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema_json: str):
-        self._options = dict(options)
-        self._schema_json = schema_json
-        t = _table(options)
-        start = options.get("starting_snapshot_id")
-        if start is not None:
-            self._initial = int(start)
-        else:  # kafka `latest` convention: tail only NEW snapshots
-            snaps = t.snapshots()
-            self._initial = (int(snaps[-1]["snapshot-id"]) if snaps
-                             else _GENESIS)
+class _IceStreamReader(_IceScan, _StreamReader):
+    """Steps are snapshot ids; the carried state is the previous
+    snapshot's data files and position masks, so each inventory in the
+    range is decoded once."""
 
-    def initialOffset(self):
-        return {"snapshot_id": self._initial}
+    _offset = "snapshot_id"
+    _start_option = "starting_snapshot_id"
 
-    def latestOffset(self):
-        snaps = _table(self._options).snapshots()
-        return {"snapshot_id":
-                int(snaps[-1]["snapshot-id"]) if snaps else _GENESIS}
-
-    def commit(self, end):
-        pass  # snapshots are durable on disk; nothing to release
+    def _head(self, t):
+        snaps = t.snapshots()
+        return int(snaps[-1]["snapshot-id"]) if snaps else _GENESIS
 
     def _range(self, t, start_id: int, end_id: int) -> list[int]:
         """Snapshot ids strictly after start_id up to end_id, in
@@ -254,72 +152,28 @@ class _IceStreamReader(DataSourceStreamReader):
         s = ids.index(start_id)
         return ids[s + 1:e + 1]
 
-    def partitions(self, start, end):
-        t = _table(self._options)
-        sids = self._range(t, int(start["snapshot_id"]),
-                           int(end["snapshot_id"]))
-        parts: list[_IcePart] = []
-        prev = int(start["snapshot_id"])
-        for sid in sids:
-            parts.extend(self._diff_one(t, prev, sid))
-            prev = sid
-        from forklift_spark.datasource import _pack_parts
+    def _begin(self, t, lo: int, hi: int):
+        return ({}, {}) if lo == _GENESIS else self._snapshot(t, lo)
 
-        parts = _pack_parts(parts, lambda p: getattr(p, "_nbytes", 0))
-        return parts or [_IcePart(None, schema_json=None)]
+    def _snapshot(self, t, sid: int):
+        inv = t.file_inventory(sid)
+        _refuse_eq(inv, "iceberglite stream")
+        self._resolve_ids(inv)
+        return {f["path"]: f for f in inv["data"]}, _pos_masks(t, inv)
 
-    def _diff_one(self, t, a_id: int, b_id: int) -> list[_IcePart]:
-        inv_b = t.file_inventory(b_id)
-        _refuse_eq(inv_b, "iceberglite stream")
-        if a_id == _GENESIS:
-            inv_a = {"data": [], "pos_deletes": [], "eq_deletes": []}
-        else:
-            inv_a = t.file_inventory(a_id)
-            _refuse_eq(inv_a, "iceberglite stream")
-        a = {f["path"]: f for f in inv_a["data"]}
-        b = {f["path"]: f for f in inv_b["data"]}
-        masks_a = _pos_masks(t, inv_a)
-        masks_b = _pos_masks(t, inv_b)
-        sj = self._schema_json
-        idm = {int(f["id"]): f["name"]
-               for f in inv_b["schema_json"]["fields"]}
-        def mk(p, rec, **kw) -> _IcePart:
-            fp = _IcePart(p, schema_json=sj, id_map=idm, **kw)
-            fp._nbytes = (rec or {}).get("bytes") or 0
-            return fp
-
-        parts: list[_IcePart] = []
-        for p in sorted(b):  # added files -> inserts (minus mask at b)
-            if p not in a:
-                parts.append(mk(p, b[p], drop_pos=masks_b.get(p),
-                               change=("insert", b_id)))
-        for p in sorted(a):  # removed files -> deletes of live rows
-            if p not in b:
-                parts.append(mk(p, a[p], drop_pos=masks_a.get(p),
-                               change=("delete", b_id)))
-        for p in sorted(set(a) & set(b)):  # mask churn: exact rows
-            ma = masks_a.get(p, frozenset())
-            mb = masks_b.get(p, frozenset())
-            if mb - ma:
-                parts.append(mk(p, b[p], emit_pos=mb - ma,
-                               change=("delete", b_id)))
-            if ma - mb:  # restore of previously-masked rows
-                parts.append(mk(p, a[p], emit_pos=ma - mb,
-                               change=("insert", b_id)))
-        return parts
-
-    def read(self, partition):
-        from forklift_spark.datasource import _GroupPart, _iter_group
-
-        if isinstance(partition, _GroupPart):
-            return _iter_group(partition, _read_ice_batches)
-        if partition.path is None:
-            return iter(())
-        return _read_ice_batches(partition)
+    def _step(self, t, before, sid: int):
+        after = self._snapshot(t, sid)
+        return after, (before[0], after[0], before[1], after[1])
 
 
-class IcebergLiteDataSource(DataSource):
+class IcebergLiteDataSource(_CdcSource):
     """format name: ``iceberglite`` (see module docstring)."""
+
+    _batch_reader = _IceBatchReader
+    _stream_reader = _IceStreamReader
+    _batch_feed = "IcebergLiteTable.changelog()"
+    _what = "an Iceberg table through iceberglite"
+    _version_col = "_commit_snapshot_id"
 
     @classmethod
     def name(cls):
@@ -327,43 +181,4 @@ class IcebergLiteDataSource(DataSource):
 
     def _table_schema(self):
         t = _table(self.options)
-        meta = t.metadata()
-        schema, _ = t.schema_struct(meta)
-        return schema
-
-    def schema(self):
-        from pyspark.sql.types import (
-            LongType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        base = self._table_schema()
-        if str(self.options.get("cdc", "")).lower() == "true":
-            base = StructType(
-                base.fields
-                + [StructField("_change_type", StringType(), False),
-                   StructField("_commit_snapshot_id", LongType(),
-                               False)]
-            )
-        return base
-
-    def reader(self, schema):
-        if str(self.options.get("cdc", "")).lower() == "true":
-            raise ValueError(
-                "cdc=true is a streaming option; use spark.readStream "
-                "(batch change feeds: IcebergLiteTable.changelog())")
-        return _IceBatchReader(
-            self.options,
-            json.dumps(self._table_schema().jsonValue()))
-
-    def streamReader(self, schema):
-        if str(self.options.get("cdc", "")).lower() != "true":
-            raise ValueError(
-                "streaming an Iceberg table through iceberglite "
-                "requires .option('cdc', 'true'): the feed carries "
-                "_change_type/_commit_snapshot_id change events, not a "
-                "table snapshot")
-        return _IceStreamReader(self.options, json.dumps(
-            self.schema().jsonValue()))
+        return t.schema_struct(t.metadata())[0]

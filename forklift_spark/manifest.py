@@ -80,6 +80,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from forklift_spark.changelog import replicate_net
+
 PART_DIR_COL = "__fsp__"  # file-system-partition dup column (never in data)
 BUCKET_DIR_COL = "__fsb__"  # key-hash bucket dup column (never in data)
 NULL_TOKEN = "__HIVE_DEFAULT_PARTITION__"
@@ -178,9 +180,6 @@ def _probe_conf(spark: SparkSession):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-# changes() replicates |net| duplicate rows via explode(sequence);
-# chunking bounds any one materialized array (ADVICE r8 low)
-_REPLICATE_CHUNK = 1_000_000
 # manifest entry lists live in immutable parquet SEGMENT sidecars under
 # metadata/ (the Iceberg manifest-file shape); the per-version JSON holds
 # only one small record per segment. A commit writes O(delta) metadata:
@@ -2973,59 +2972,14 @@ class ManifestTable:
         # the changed-file scans don't recompute per branch
         del_cand = del_cand.localCheckpoint(eager=False)
         ins_cand = ins_cand.localCheckpoint(eager=False)
-        # ONE aggregation replaces the exceptAll PAIR (optimization r8,
-        # guide §2.1 "shuffle less"): Spark rewrites each exceptAll to
-        # union -> count-aggregate -> replicate-rows, so the old
-        # inserts/deletes pair shuffled the same candidate union twice to
-        # compute the two directions of one multiset difference. Signed
-        # weights fuse them: net count > 0 means that many insert rows,
-        # < 0 deletes, 0 fully cancelled (pure layout moves). Multiset
-        # semantics are identical — duplicates replicate |net| times and
-        # grouping is null-safe, exactly like exceptAll.
-        names = ins_cand.columns
-        diff = (
-            ins_cand.withColumn("__w", F.lit(1).cast("long"))
-            .unionByName(del_cand.withColumn("__w", F.lit(-1).cast("long")))
-            .groupBy(*names)
-            .agg(F.sum("__w").alias("__w"))
-            .filter(F.col("__w") != 0)
-        )
-        # replication via explode(sequence) materializes the whole array
-        # per surviving group — unlike exceptAll's streaming
-        # ReplicateRows generator, a row value duplicated millions of
-        # times within the delta would build a multi-GB array (ADVICE r8
-        # low). Two-level chunking bounds any single array at
-        # _REPLICATE_CHUNK entries (8 MB of longs) while the common
-        # |net|=1 case pays two singleton explodes.
-        n = F.abs(F.col("__w"))
-        chunk = F.lit(_REPLICATE_CHUNK).cast("long")
-        return (
-            diff.withColumn(
-                "_change_type",
-                F.when(F.col("__w") > 0, F.lit("insert")).otherwise(
-                    F.lit("delete")
-                ),
-            )
-            .withColumn(
-                "__c",
-                F.explode(
-                    F.sequence(
-                        F.lit(0).cast("long"),
-                        F.floor((n - F.lit(1)) / chunk).cast("long"),
-                    )
-                ),
-            )
-            .withColumn(
-                "__r",
-                F.explode(
-                    F.sequence(
-                        F.lit(1).cast("long"),
-                        F.least(chunk, n - F.col("__c") * chunk),
-                    )
-                ),
-            )
-            .drop("__w", "__c", "__r")
-        )
+        # ONE signed-weight aggregation replaces the exceptAll pair:
+        # Spark rewrites each exceptAll to union -> count-aggregate ->
+        # replicate-rows, so the pair would shuffle the same candidate
+        # union twice to compute the two directions of one difference
+        return replicate_net(
+            ins_cand.withColumn("__w", F.lit(1).cast("long")).unionByName(
+                del_cand.withColumn("__w", F.lit(-1).cast("long"))),
+            ins_cand.columns, "__w")
 
     def compact(
         self,
