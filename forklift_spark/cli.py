@@ -164,14 +164,14 @@ def main(argv: list[str] | None = None) -> int:
         "--expr", help="CHECK expression (set-constraint)"
     )
     p_man.add_argument(
-        "--dest", help="export-*/sync-*: destination directory for the "
-        "exported Delta log / Iceberg table"
+        "--dest", help="export-*/sync-*: destination directory of the "
+        "published Delta log / Iceberg table (an export is the first "
+        "sync; on an existing destination, an incremental sync)"
     )
     p_man.add_argument(
         "--dv-mode", choices=["refuse", "native"], default="refuse",
-        help="export-*/sync-*: 'native' publishes live dv masks as real "
-        "Delta deletion vectors / Iceberg v2 position deletes instead "
-        "of refusing until compact()",
+        help="export-*/sync-*: live dv mask policy (see "
+        "forklift_spark/connections/publish.py)",
     )
     p_man.add_argument(
         "--cdf", action="store_true",

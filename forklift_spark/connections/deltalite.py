@@ -108,6 +108,12 @@ from pyspark.sql import types as T
 
 from forklift_spark.changelog import position_changelog
 from forklift_spark.connections.base import Connection
+from forklift_spark.connections.publish import (
+    dv_masks,
+    link_or_copy,
+    live_rows,
+    vacuum_dest,
+)
 from forklift_spark.functions.roaring import (
     deserialize_roaring64,
     z85_decode,
@@ -1580,53 +1586,6 @@ class DeltaLiteConnection(Connection):
         )
 
 
-def _dv_guard_or_masks(table, entries: list[dict], dv_mode: str,
-                       verb: str) -> dict[str, list[int]]:
-    """Resolve the export's dv policy: 'refuse' raises on any live mask
-    (protocol-v1 readers would see deleted rows); 'native' extracts the
-    masks so the caller can write real Delta DVs (reader version 3)."""
-    masked = [e for e in entries if e.get("dv")]
-    if not masked:
-        return {}
-    if dv_mode == "native":
-        return _dv_masks_of(table, masked)
-    raise ValueError(
-        "table has live deletion vectors; external Delta-v1 readers "
-        "would see deleted rows — run maintain() (or "
-        f"compact(auto_dv=True)) and {verb} again, or pass "
-        "dv_mode='native' to write real Delta deletion vectors "
-        "(requires reader-version-3-capable consumers)"
-    )
-
-
-def _dv_masks_of(table, entries: list[dict]) -> dict[str, list[int]]:
-    """Per-file deleted positions from the manifest's dv sidecars:
-    {entry path: sorted row indexes}. Each entry's positions come from
-    ITS OWN dv dir (a dir is complete for the entries that reference
-    it). Driver-side pyarrow read, O(dv rows) — the same class the
-    manifest read path broadcasts (maintain() folds oversized masks)."""
-    import pyarrow.parquet as pq
-
-    by_dir: dict[str, set[str]] = {}
-    for e in entries:
-        by_dir.setdefault(e["dv"], set()).add(e["path"])
-    masks: dict[str, set[int]] = {}
-    for d, want in by_dir.items():
-        droot = os.path.join(table.path, d)
-        for dp, _dirs, fs in os.walk(droot):
-            for f in fs:
-                if not f.endswith(".parquet"):
-                    continue
-                tb = pq.read_table(os.path.join(dp, f),
-                                   columns=["file_ref", "pos"])
-                for ref, p in zip(tb.column(0).to_pylist(),
-                                  tb.column(1).to_pylist()):
-                    rel = unquote(ref)
-                    if rel in want:
-                        masks.setdefault(rel, set()).add(int(p))
-    return {p: sorted(v) for p, v in masks.items()}
-
-
 def write_dv_bin(dest: str, masks: dict[str, list[int]]) -> dict[str, dict]:
     """Write ONE spec-shaped DV file at ``dest`` holding every mask
     (version byte, then per mask ``[int32 BE size][portable
@@ -1724,11 +1683,9 @@ def _add_action(table, dest: str, e: dict,
     """Hard-link entry ``e`` into ``dest`` and build its add action
     (DV descriptor + source-dv tag when the entry is masked, zone maps
     re-rendered as spec stats for external data skipping). ``types``:
-    {col: DataType} of the manifest schema, computed ONCE by the
-    caller (per-entry schema loads would be O(files^2))."""
-    _link_or_copy(os.path.join(table.path, e["path"]),
-                  os.path.join(dest, e["path"]))
-    dst = os.path.join(dest, e["path"])
+    {col: DataType} of the manifest schema, computed ONCE per commit by
+    the caller (per-entry schema loads would be O(files^2))."""
+    dst = link_or_copy(table, dest, e["path"])
     a = {"path": e["path"], "partitionValues": {},
          "size": os.path.getsize(dst),
          "modificationTime": int(os.path.getmtime(dst) * 1000),
@@ -1747,86 +1704,50 @@ def _add_action(table, dest: str, e: dict,
 def export_manifest_to_delta(table, dest: str,
                              dv_mode: str = "refuse",
                              cdf: bool = False) -> dict:
-    """One-shot SNAPSHOT export of a ManifestTable as a Delta-readable
-    table at ``dest`` (the reverse interop direction: external Delta
-    readers consume a table this engine maintains).
+    """Publish a ManifestTable as a Delta-readable table at ``dest`` —
+    the first sync; on an existing destination, an incremental sync
+    (``sync_manifest_to_delta``, which documents the layout; ``dv_mode``
+    policy: ``connections/publish.py``). The reverse interop direction:
+    external Delta readers consume a table this engine maintains.
 
-    The manifest keeps every real column INSIDE its data files (the
-    partition dir column is the synthetic ``__fsp__``), so the export
-    declares an UNPARTITIONED Delta table and adds every live file
-    as-is — any spec-conformant reader gets full rows with no
-    partition-value reconstruction. Files are hard-linked when the
-    filesystem allows (copied otherwise), so the export is O(metadata)
-    on one volume. The log is written at ``dest``, never inside the
-    manifest table directory — vacuum() treats foreign files there as
-    orphans and would reclaim the log.
-
-    Deletion-vector masks: ``dv_mode='refuse'`` (default) raises when
-    any live mask exists — the files still CONTAIN the deleted rows and
-    protocol v1 has no way to say so (run ``maintain()`` /
-    ``compact(auto_dv=True)`` first). ``dv_mode='native'`` (r7) writes
-    the masks as REAL Delta deletion vectors — portable roaring bitmaps
-    in a spec-shaped DV file, ``add.deletionVector`` descriptors, and a
-    reader-version-3 protocol with readerFeatures=[deletionVectors] —
-    so dv-heavy tables publish WITHOUT compacting, at the cost of
-    requiring v3-capable consumers. A table with no masks always writes
-    a protocol-v1 log, whatever the mode (maximum compatibility).
-
-    Returns {"files": n, "rows": n or None, "version": source version}.
+    Returns {"files": n, "rows": n or None, "version": source version}
+    for the published state.
     """
-    m = table.manifest()
-    masks = _dv_guard_or_masks(table, m["entries"], dv_mode, "export")
-    os.makedirs(os.path.join(dest, "_delta_log"), exist_ok=True)
-    descs = write_dv_bin(dest, masks) if masks else {}
-    types = {
-        f.name: f.dataType
-        for f in T.StructType.fromJson(m["schema"]).fields
-    }
-    adds = [_add_action(table, dest, e, descs, types)
-            for e in m["entries"]]
-    schema_json = json.dumps(
-        T.StructType.fromJson(m["schema"]).jsonValue()
-    )
-    with open(os.path.join(dest, "_delta_log", f"{0:020d}.json"), "w") as fh:
-        fh.write(json.dumps(_protocol_action(bool(descs), cdf)) + "\n")
-        fh.write(json.dumps({"metaData": {
-            "id": f"forklift-spark-export-{m.get('version', 0)}",
-            "format": {"provider": "parquet", "options": {}},
-            "schemaString": schema_json,
-            "partitionColumns": [],
-            "configuration": ({"delta.enableChangeDataFeed": "true"}
-                              if cdf else {}),
-            "createdTime": int(m.get("committed_at", 0) or 0),
-        }}) + "\n")
-        for a in adds:
-            fh.write(json.dumps({"add": a}) + "\n")
-    rows = None
-    if all("rows" in e for e in m["entries"]):
-        rows = sum(e["rows"] - e.get("dv_rows", 0) for e in m["entries"])
-    return {"files": len(adds), "rows": rows,
-            "version": m.get("version", 0)}
-
-
-def _link_or_copy(src: str, dst: str) -> None:
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    if not os.path.exists(dst):
-        try:
-            os.link(src, dst)
-        except OSError:
-            import shutil
-
-            shutil.copy2(src, dst)
+    out = sync_manifest_to_delta(table, dest, dv_mode=dv_mode, cdf=cdf)
+    return {k: out[k] for k in ("files", "rows", "version")}
 
 
 def sync_manifest_to_delta(table, dest: str,
                            dv_mode: str = "refuse",
                            checkpoint_interval: int = 10,
                            cdf: bool = False) -> dict:
-    """INCREMENTAL export: bring the Delta log at ``dest`` up to the
-    manifest table's current state with ONE new commit containing only
-    the delta (VERDICT r6 item 4 — the recurring-publish story, the
-    reference's repeated ``pipe`` publish, patterns/mysql_patterns.rb:
-    28-43, without re-snapshotting).
+    """Bring the Delta log at ``dest`` up to the manifest table's current
+    state with ONE new commit containing only the delta (the
+    recurring-publish story, the reference's repeated ``pipe`` publish,
+    patterns/mysql_patterns.rb:28-43, without re-snapshotting). The one
+    publish path (``connections/publish.py``, which also holds the
+    ``dv_mode`` policy): the first sync is this same diff against an
+    empty log.
+
+    The manifest keeps every real column INSIDE its data files (the
+    partition dir column is the synthetic ``__fsp__``), so the log
+    declares an UNPARTITIONED Delta table and adds every live file
+    as-is — any spec-conformant reader gets full rows with no
+    partition-value reconstruction. Files are hard-linked when the
+    filesystem allows (copied otherwise). The log is written at
+    ``dest``, never inside the manifest table directory — vacuum()
+    treats foreign files there as orphans and would reclaim the log.
+
+    Each call replays the destination log (O(metadata); no log = the
+    empty snapshot, version -1), diffs its live file set against the
+    manifest's by path, and writes commit ``v + 1`` holding ``remove``
+    actions for files gone from the manifest and ``add`` actions
+    (hard-linked, zone maps re-rendered as spec ``stats``) for new ones.
+    Version 0 also declares the ``protocol`` (reader v1, or v3 when
+    masks are published) and the ``metaData``; later commits carry a
+    ``metaData`` only when the schema changed. No-op diffs write NO
+    commit. A commit introducing the table's first DV re-states the
+    protocol at reader version 3 (spec-legal in-commit upgrade).
 
     ``cdf=True`` on the FIRST sync creates the destination with
     ``delta.enableChangeDataFeed=true`` (+ the changeDataFeed writer
@@ -1838,46 +1759,33 @@ def sync_manifest_to_delta(table, dest: str,
     update identity). Insert-only commits stay cdc-less (readers
     synthesize inserts from the adds, delta-spark's own rule).
 
-    First call (no log at ``dest``) falls back to the full snapshot
-    export. Subsequent calls replay the destination log (O(metadata)),
-    diff its live file set against the manifest's by path — manifest
-    data-file paths are write-once (uuid snap dirs), so a path-keyed
-    diff is exact — and write one commit JSON holding just the
-    ``remove`` actions for files gone from the manifest and ``add``
-    actions (hard-linked) for new ones, plus a ``metaData`` action only
-    when the schema changed. No-op diffs write NO commit (re-running a
-    publisher is idempotent).
-
-    Deletion-vector masks follow ``dv_mode`` exactly like the snapshot
-    export: 'refuse' (default) raises; 'native' (r7) publishes a dv
-    merge/delete as Delta does its own DML — the kept file is RE-ADDED
-    with a fresh DV descriptor (a spec DV update), detected exactly via
-    the ``forklift_dv_src`` add tag recording which manifest dv dir the
-    exported mask came from. A commit that introduces the table's first
-    DV also re-states the protocol at reader version 3 (spec-legal
-    in-commit upgrade).
-
-    Every ``checkpoint_interval`` commits (default 10, Delta's own
-    cadence; 0 disables) the sync also writes a spec parquet checkpoint
-    + ``_last_checkpoint`` so external replay stays bounded at
-    checkpoint + tail however long the publisher lives
+    Every ``checkpoint_interval``-th version (default 10, Delta's own
+    cadence; 0 disables; never version 0) the sync also writes a spec
+    parquet checkpoint + ``_last_checkpoint`` so external replay stays
+    bounded at checkpoint + tail however long the publisher lives
     (``checkpoint_delta_export``).
 
     Returns {"mode": "full"|"incremental"|"noop", "added", "removed",
-    "dv_updated", "version", "delta_version"[, "checkpoint"]}.
+    "dv_updated", "version", "delta_version", "files", "rows"
+    [, "checkpoint"]} — ``files``/``rows``: the published live state.
     """
-    log_dir = os.path.join(dest, "_delta_log")
-    if not os.path.isdir(log_dir):
-        stats = export_manifest_to_delta(table, dest, dv_mode=dv_mode,
-                                         cdf=cdf)
-        return {"mode": "full", "added": stats["files"], "removed": 0,
-                "dv_updated": 0, "version": stats["version"],
-                "delta_version": 0}
     m = table.manifest()
     entries = {e["path"]: e for e in m["entries"]}
-    masks = _dv_guard_or_masks(table, m["entries"], dv_mode, "sync")
-    t = DeltaLiteTable(table.spark, dest)
-    snap = t.snapshot()
+    masks = dv_masks(table, m["entries"], dv_mode, "Delta-v1",
+                     "real Delta deletion vectors (requires "
+                     "reader-version-3-capable consumers)")
+    log_dir = os.path.join(dest, "_delta_log")
+    ts = int(m.get("committed_at", 0) or 0)
+    if os.path.isdir(log_dir):
+        snap = DeltaLiteTable(table.spark, dest).snapshot()
+    else:  # genesis: the empty snapshot, and the metaData v0 declares
+        snap = {"version": -1, "files": {}, "schema": None, "meta": {
+            "id": f"forklift-spark-export-{m.get('version', 0)}",
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": None, "partitionColumns": [],
+            "configuration": ({"delta.enableChangeDataFeed": "true"}
+                              if cdf else {}),
+            "createdTime": ts}}
     exported = snap["files"]
     added = sorted(set(entries) - set(exported))
     removed = sorted(set(exported) - set(entries))
@@ -1891,14 +1799,15 @@ def sync_manifest_to_delta(table, dest: str,
     )
     schema = T.StructType.fromJson(m["schema"])
     schema_changed = schema != snap["schema"]
+    out = {"mode": "noop", "added": len(added), "removed": len(removed),
+           "dv_updated": len(dv_updated), "version": m.get("version", 0),
+           "delta_version": snap["version"], "files": len(entries),
+           "rows": live_rows(m["entries"])}
     if not added and not removed and not dv_updated and not schema_changed:
-        return {"mode": "noop", "added": 0, "removed": 0, "dv_updated": 0,
-                "version": m.get("version", 0),
-                "delta_version": snap["version"]}
+        return out
     need_dv = {p: masks[p] for p in (*added, *dv_updated) if p in masks}
     descs = write_dv_bin(dest, need_dv) if need_dv else {}
     v = snap["version"] + 1
-    ts = int(m.get("committed_at", 0) or 0)
 
     # ---- Change Data Feed (r8): when the destination declares
     # delta.enableChangeDataFeed, any commit carrying deletes or DV
@@ -1983,10 +1892,14 @@ def sync_manifest_to_delta(table, dest: str,
                 "partitionValues": {},
                 "size": os.path.getsize(f), "dataChange": False}})
 
+    types = {f.name: f.dataType for f in schema.fields}
+    os.makedirs(log_dir, exist_ok=True)
     with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as fh:
-        if descs:  # first-DV commits upgrade the protocol; re-stating
-            # it on later DV commits is spec-legal (last writer wins)
-            fh.write(json.dumps(_protocol_action(True, cdf_on)) + "\n")
+        if descs or v == 0:  # v0 declares the protocol; first-DV
+            # commits upgrade it, and re-stating it on later DV commits
+            # is spec-legal (last writer wins)
+            fh.write(json.dumps(_protocol_action(bool(descs), cdf_on))
+                     + "\n")
         if schema_changed:
             meta = dict(snap["meta"])
             meta["schemaString"] = json.dumps(schema.jsonValue())
@@ -2013,18 +1926,14 @@ def sync_manifest_to_delta(table, dest: str,
         for rel in (*added, *dv_updated):
             fh.write(json.dumps(
                 {"add": _add_action(table, dest, entries[rel], descs,
-                                    {f.name: f.dataType
-                                     for f in schema.fields})}
-            ) + "\n")
+                                    types)}) + "\n")
         for act in cdc_actions:
             fh.write(json.dumps(act) + "\n")
-    out = {"mode": "incremental", "added": len(added),
-           "removed": len(removed), "dv_updated": len(dv_updated),
-           "version": m.get("version", 0), "delta_version": v}
+    out.update(mode="incremental" if v else "full", delta_version=v)
     # bounded external replay (r8): real Delta writers checkpoint every
     # N commits so readers replay checkpoint + tail, not every JSON
     # commit ever published; 0/None disables
-    if checkpoint_interval and v % checkpoint_interval == 0:
+    if checkpoint_interval and v and v % checkpoint_interval == 0:
         ck = checkpoint_delta_export(table.spark, dest, version=v)
         out["checkpoint"] = ck["version"]
     return out
@@ -2192,43 +2101,11 @@ def vacuum_delta_export(spark: SparkSession, dest: str,
 
     Returns {"removed": n, "kept_live": n, "kept_grace": n}.
     """
-    import time as _time
-
     t = DeltaLiteTable(spark, dest)
-    snap = t.snapshot()
-    root = t.path
     live: set[str] = set()
-    for rel, e in snap["files"].items():
-        live.add(os.path.normpath(os.path.join(root, rel)))
+    for rel, e in t.snapshot()["files"].items():
+        live.add(os.path.join(t.path, rel))
         dv = e.get("dv")
         if dv and dv.get("storageType") in ("u", "p"):
-            live.add(os.path.normpath(dv_file_path(root, dv)))
-    now = int(_time.time() * 1000) if now_ms is None else int(now_ms)
-    removed = kept_live = kept_grace = 0
-    log_dir = os.path.normpath(t.log_dir)
-    for dp, dirs, fs in os.walk(root):
-        # never descend into the log: history must stay replayable
-        dirs[:] = [d for d in dirs
-                   if os.path.normpath(os.path.join(dp, d)) != log_dir
-                   and not d.startswith(".")]
-        for f in fs:
-            if f.startswith(".") or f.startswith("_"):
-                continue
-            p = os.path.normpath(os.path.join(dp, f))
-            if p in live:
-                kept_live += 1
-            elif now - int(os.path.getmtime(p) * 1000) < grace_ms:
-                kept_grace += 1
-            else:
-                os.remove(p)
-                removed += 1
-    # prune now-empty data dirs (never the log)
-    for dp, dirs, fs in os.walk(root, topdown=False):
-        if dp != root and not dirs and not fs \
-                and not os.path.normpath(dp).startswith(log_dir):
-            try:
-                os.rmdir(dp)
-            except OSError:
-                pass
-    return {"removed": removed, "kept_live": kept_live,
-            "kept_grace": kept_grace}
+            live.add(dv_file_path(t.path, dv))
+    return vacuum_dest(t.path, live, "_delta_log", grace_ms, now_ms)

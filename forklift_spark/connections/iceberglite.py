@@ -54,6 +54,12 @@ from pyspark.sql import types as T
 
 from forklift_spark.changelog import position_changelog
 from forklift_spark.connections.base import Connection
+from forklift_spark.connections.publish import (
+    dv_masks,
+    link_or_copy,
+    live_rows,
+    vacuum_dest,
+)
 from forklift_spark.functions import avrocodec as av
 
 _DECIMAL_RE = re.compile(r"^decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)$")
@@ -646,20 +652,13 @@ class IcebergLiteTable:
                           for p in snap.get("manifests", [])]
 
         for mf in mf_entries:
-            mf_seq = mf.get("sequence_number") or 0
             _, entries = av.read_container_file(
                 self._abs(mf["manifest_path"]))
             for e in entries:
                 if e.get("status") == 2:  # DELETED — not live in this snap
                     continue
                 df_rec = e.get("data_file") or {}
-                # v2 inheritance: a null entry sequence number inherits
-                # the manifest's (spec: sequence number inheritance)
-                seq = e.get("data_sequence_number")
-                if seq is None:
-                    seq = e.get("sequence_number")
-                if seq is None:
-                    seq = mf_seq
+                seq = _entry_seq(e, mf)
                 fmt = str(df_rec.get("file_format", "PARQUET")).upper()
                 if fmt != "PARQUET":
                     raise IcebergUnsupported(
@@ -1294,25 +1293,6 @@ def spark_type_to_iceberg(dt: T.DataType, next_id) -> object:
     raise IcebergUnsupported(f"Spark type {dt} has no Iceberg mapping")
 
 
-def _iceberg_dv_guard(table, entries: list[dict], dv_mode: str,
-                      verb: str) -> dict[str, list[int]]:
-    """'refuse' raises on any live dv mask (the parquet still contains
-    the rows); 'native' extracts the masks for v2 position deletes."""
-    masked = [e for e in entries if e.get("dv")]
-    if not masked:
-        return {}
-    if dv_mode == "native":
-        from forklift_spark.connections.deltalite import _dv_masks_of
-
-        return _dv_masks_of(table, masked)
-    raise ValueError(
-        "table has live deletion vectors; external Iceberg readers "
-        "would see deleted rows — run maintain() (or "
-        f"compact(auto_dv=True)) and {verb} again, or pass "
-        "dv_mode='native' to write spec-v2 POSITION DELETES"
-    )
-
-
 _PART_AVRO = {"int": "int", "long": "long", "string": "string",
               "double": "double", "float": "float",
               "boolean": "boolean"}
@@ -1469,162 +1449,80 @@ def _ensure_list_counts(mf: dict, entries: list[dict]) -> dict:
 
 def export_manifest_to_iceberg(table, dest: str,
                                dv_mode: str = "refuse") -> dict:
-    """One-shot SNAPSHOT export of a ManifestTable as an Iceberg
-    spec-v2 table at ``dest`` — the reverse interop direction, sibling
-    of ``deltalite.export_manifest_to_delta``: any spec-conformant
-    Iceberg reader consumes a table this engine maintains.
+    """Publish a ManifestTable as an Iceberg spec-v2 table at ``dest`` —
+    the first sync; on an existing destination, an incremental sync
+    (``sync_manifest_to_iceberg``, which documents the layout;
+    ``dv_mode`` policy: ``connections/publish.py``). The reverse interop
+    direction, sibling of ``deltalite.export_manifest_to_delta``: any
+    spec-conformant Iceberg reader consumes a table this engine
+    maintains.
 
-    Layout written: hard-linked (copied cross-volume) data files, ONE
-    Avro manifest adding every live file at sequence 1, a manifest
-    list, ``metadata/v1.metadata.json`` (format-version 2, unpartitioned
-    spec — the manifest format keeps every real column inside its data
-    files) and ``version-hint.text``.
-
-    Deletion-vector masks follow ``dv_mode``: 'refuse' (default) raises
-    — the parquet files still contain the masked rows — run
-    ``maintain()`` / ``compact(auto_dv=True)`` first. 'native' (r7)
-    writes the masks as REAL v2 POSITION DELETES: one
-    ``(file_path, pos)`` delete parquet at sequence 2 referenced by a
-    content=1 delete manifest (data lands at sequence 1, so the spec's
-    "applies to data seq <= delete seq" rule covers every file) — the
-    exact dual of the Delta export's dv_mode='native'.
-
-    Returns {"files": n, "rows": n or None, "version": source version}.
+    Returns {"files": n, "rows": n or None, "version": source version}
+    for the published state.
     """
-    m = table.manifest()
-    masks = _iceberg_dv_guard(table, m["entries"], dv_mode, "export")
-    meta_dir = os.path.join(dest, "metadata")
-    os.makedirs(meta_dir, exist_ok=True)
+    out = sync_manifest_to_iceberg(table, dest, dv_mode=dv_mode)
+    return {k: out[k] for k in ("files", "rows", "version")}
 
-    counter = iter(range(1, 1 << 20))
-    schema_json = spark_type_to_iceberg(
-        T.StructType.fromJson(m["schema"]), lambda: next(counter))
-    schema_json["schema-id"] = 0
-    fields_map = _fields_map(schema_json)
-    spec_fields, entry_schema, part_val = _identity_partition(
-        m, schema_json)
 
-    entries = []
-    for e in m["entries"]:
-        src = os.path.join(table.path, e["path"])
-        dst = os.path.join(dest, e["path"])
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        if not os.path.exists(dst):
-            try:
-                os.link(src, dst)
-            except OSError:
-                import shutil
+def _entry_seq(e: dict, mf: dict) -> int:
+    """Spec sequence-number inheritance for manifest entry ``e`` of
+    manifest-list entry ``mf``: the entry's data sequence number, else
+    its sequence number, else the manifest's (null means inherit), else
+    0 (v1 tables carry none)."""
+    for seq in (e.get("data_sequence_number"), e.get("sequence_number"),
+                mf.get("sequence_number")):
+        if seq is not None:
+            return int(seq)
+    return 0
 
-                shutil.copy2(src, dst)
-        lo_b, hi_b = _entry_bounds(fields_map, e)
-        part = ({m["partition_by"]: part_val(e.get("partition"))}
-                if spec_fields else {})
-        entries.append({
-            "status": 1, "snapshot_id": 1, "sequence_number": 1,
-            "data_file": {
-                "content": 0, "file_path": dst,
-                "file_format": "PARQUET", "partition": part,
-                "record_count": int(e.get("rows") or 0),
-                "file_size_in_bytes": os.path.getsize(dst),
-                "lower_bounds": lo_b, "upper_bounds": hi_b,
-                "equality_ids": None,
-            }})
-    mpath = os.path.join(meta_dir, "m-00001.avro")
-    av.write_container_file(mpath, entry_schema, entries)
-    added_rows = sum(e["data_file"]["record_count"] for e in entries)
-    mf_list = [
-        {"manifest_path": mpath, "manifest_length": os.path.getsize(mpath),
-         "partition_spec_id": 0, "content": 0, "sequence_number": 1,
-         "min_sequence_number": 1, "added_snapshot_id": 1,
-         "added_files_count": len(entries), "existing_files_count": 0,
-         "deleted_files_count": 0, "added_rows_count": added_rows,
-         "existing_rows_count": 0, "deleted_rows_count": 0}]
-    last_seq = 1
-    if masks:
-        # masks become v2 position deletes at sequence 2: data sits at
-        # sequence 1, so the spec rule (applies to data seq <= delete
-        # seq) covers every exported file
-        last_seq = 2
-        dfile = _write_pos_delete_file(dest, masks)
-        mf_list.append(_delete_manifest_entry(meta_dir, "00001", dfile,
-                                              snap_id=1, seq=2))
-    lpath = os.path.join(meta_dir, "snap-1.avro")
-    av.write_container_file(lpath, json.dumps(MANIFEST_FILE_SCHEMA),
-                            mf_list)
 
-    import uuid as _uuid
-
-    with open(os.path.join(meta_dir, "v1.metadata.json"), "w") as fh:
-        json.dump({
-            "format-version": 2,
-            "table-uuid": str(_uuid.uuid4()),
-            "location": dest, "last-sequence-number": last_seq,
-            "last-updated-ms": int(m.get("committed_at", 0) or 0),
-            "last-column-id": next(counter) - 1,
-            "current-schema-id": 0, "schemas": [schema_json],
-            "default-spec-id": 0,
-            # identity partition spec when the source is partitioned
-            # (r8): external planners data-skip from the r102 tuples
-            "partition-specs": [{"spec-id": 0,
-                                 "fields": spec_fields or []}],
-            # spec-required even for unpartitioned/unsorted tables
-            # (ADVICE r6 item 1: pyiceberg/Java reject their absence):
-            # 999 = highest pre-assigned partition field id baseline
-            "last-partition-id": 1000 if spec_fields else 999,
-            "sort-orders": [{"order-id": 0, "fields": []}],
-            "default-sort-order-id": 0,
-            "current-snapshot-id": 1,
-            "refs": {"main": {"snapshot-id": 1, "type": "branch"}},
-            "snapshots": [{"snapshot-id": 1, "sequence-number": last_seq,
-                           "timestamp-ms": int(m.get("committed_at", 0)
-                                               or 0),
-                           "manifest-list": lpath,
-                           "summary": {"operation": "append"},
-                           "schema-id": 0}],
-        }, fh)
+def _write_metadata(meta_dir: str, prev_file: str | None,
+                    meta: dict) -> None:
+    """Write ``meta`` as the ``v{N}.metadata.json`` after ``prev_file``
+    (None: v1) and point ``version-hint.text`` at it."""
+    num = _META_NUM_RE.match(os.path.basename(prev_file or "v0"))
+    v = int(num.group(1)) + 1 if num else 2
+    with open(os.path.join(meta_dir, f"v{v}.metadata.json"), "w") as fh:
+        json.dump(meta, fh)
     with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write("1")
-    rows = None
-    if all("rows" in e for e in m["entries"]):
-        rows = sum(e["rows"] - e.get("dv_rows", 0) for e in m["entries"])
-    return {"files": len(entries), "rows": rows,
-            "version": m.get("version", 0)}
-
-
-def _link_or_copy(src: str, dst: str) -> None:
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    if not os.path.exists(dst):
-        try:
-            os.link(src, dst)
-        except OSError:
-            import shutil
-
-            shutil.copy2(src, dst)
+        fh.write(str(v))
 
 
 def sync_manifest_to_iceberg(table, dest: str,
                              dv_mode: str = "refuse") -> dict:
-    """INCREMENTAL export: append ONE new Iceberg snapshot at ``dest``
-    covering the manifest table's commits since the last export
-    (VERDICT r6 item 4 — recurring publish without re-snapshotting;
-    sibling of ``deltalite.sync_manifest_to_delta``).
+    """Append ONE new Iceberg snapshot at ``dest`` covering the manifest
+    table's commits since the last publish (recurring publish without
+    re-snapshotting; sibling of ``deltalite.sync_manifest_to_delta``).
+    The one publish path (``connections/publish.py``, which also holds
+    the ``dv_mode`` policy): the first sync is this same diff against
+    empty metadata.
 
-    First call falls back to the full snapshot export. Subsequent
-    calls replay the destination's CURRENT snapshot (Avro manifest
-    list + manifests — O(metadata)), diff its live data files against
-    the manifest table's by path (paths are write-once), then write:
+    Each call replays the destination's CURRENT snapshot (Avro manifest
+    list + manifests — O(metadata); no ``metadata/`` = no snapshot, no
+    schema, no spec), diffs its live data files against the manifest
+    table's by path (paths are write-once), then writes:
 
-    - untouched Avro manifests REUSED verbatim in the new manifest
-      list (zero rewrite — this is what makes the sync O(delta)),
+    - untouched Avro manifests REUSED verbatim in the new manifest list
+      (zero rewrite — this is what makes the sync O(delta)),
     - manifests containing newly-removed files REWRITTEN once each:
       survivors become status=EXISTING with their original data
       sequence numbers, removed files become status=DELETED (readers
       skip them; changelog consumers see an honest delete),
     - one NEW manifest with status=ADDED entries (hard-linked files)
       at the next sequence number,
+    - under ``dv_mode='native'``, one position-delete file holding just
+      the positions not yet published, at that same sequence number (a
+      position delete applies to data seq <= its own),
     - a new manifest list, a new snapshot appended to the metadata
-      (operation=overwrite when anything was removed, append
-      otherwise), ``v{N+1}.metadata.json`` + version-hint bump.
+      (operation=overwrite when anything existing was removed or
+      deleted, append otherwise), ``v{N+1}.metadata.json`` +
+      version-hint bump.
+
+    The first snapshot is therefore: schema-id 0 with field ids from 1,
+    spec-id 0 (the source's ``partition_by`` as an identity partition at
+    field-id 1000 when its type allows, else unpartitioned),
+    ``m-00001.avro``, ``snap-1.avro``, snapshot 1 (append, no parent)
+    at sequence number 1, ``v1.metadata.json`` and version-hint 1.
 
     Schema evolution: appended top-level columns get fresh field ids;
     existing columns keep their ids by name (the manifest format only
@@ -1632,27 +1530,41 @@ def sync_manifest_to_iceberg(table, dest: str,
     existing column refuses loudly — silently re-assigning ids would
     corrupt column resolution in external readers.
 
-    Same dv guard as the snapshot export. Returns {"mode", "added",
-    "removed", "rewritten_manifests", "version", "snapshot_id"}.
+    Returns {"mode": "full"|"incremental"|"noop", "added", "removed",
+    "rewritten_manifests", "dv_updated", "version", "snapshot_id",
+    "files", "rows"} — ``files``/``rows``: the published live state.
     """
-    if not os.path.isdir(os.path.join(dest, "metadata")):
-        stats = export_manifest_to_iceberg(table, dest, dv_mode=dv_mode)
-        return {"mode": "full", "added": stats["files"], "removed": 0,
-                "rewritten_manifests": 0, "dv_updated": 0,
-                "version": stats["version"], "snapshot_id": 1}
     m = table.manifest()
-    masks = _iceberg_dv_guard(table, m["entries"], dv_mode, "sync")
+    masks = dv_masks(table, m["entries"], dv_mode, "Iceberg",
+                     "spec-v2 POSITION DELETES")
+    meta_dir = os.path.join(dest, "metadata")
+    genesis = not os.path.isdir(meta_dir)
     t = IcebergLiteTable(table.spark, dest)
-    meta_file = t._resolve_metadata_file()
-    meta = t.metadata()
-    _, schema_json = t.schema_struct(meta)
-    snap = t._snapshot_entry(meta)
-    _, mf_entries = av.read_container_file(t._abs(snap["manifest-list"]))
+    if genesis:
+        import uuid as _uuid
 
-    current = {e["path"] for e in m["entries"]}
-    rows_by_path = {e["path"]: int(e.get("rows") or 0) for e in m["entries"]}
-    src_by_path = {e["path"]: e for e in m["entries"]}
-    fields_map = _fields_map(schema_json)
+        meta_file, snap, mf_entries = None, {}, []
+        schema_json = {"type": "struct", "fields": []}
+        meta = {
+            "format-version": 2, "table-uuid": str(_uuid.uuid4()),
+            "location": dest, "last-column-id": 0,
+            "current-schema-id": -1,  # so the first schema is id 0
+            # spec-required even for unpartitioned/unsorted tables
+            # (ADVICE r6 item 1: pyiceberg/Java reject their absence):
+            # 999 = highest pre-assigned partition field id baseline
+            "last-partition-id": 999,
+            "sort-orders": [{"order-id": 0, "fields": []}],
+            "default-sort-order-id": 0,
+        }
+    else:
+        meta_file = t._resolve_metadata_file()
+        meta = t.metadata()
+        _, schema_json = t.schema_struct(meta)
+        snap = t._snapshot_entry(meta)
+        _, mf_entries = av.read_container_file(
+            t._abs(snap["manifest-list"]))
+    src = {e["path"]: e for e in m["entries"]}
+    current = set(src)
 
     # inventory each manifest: (list-entry, entries, rel path per entry)
     def _rel(fp: str) -> str:
@@ -1722,10 +1634,10 @@ def sync_manifest_to_iceberg(table, dest: str,
 
     # ---- schema evolution (append-only; id-stable by name) ----
     new_schema_json = schema_json
-    schema_changed = False
     old_struct = _schema_struct(schema_json)
     new_struct = T.StructType.fromJson(m["schema"])
-    if old_struct != new_struct:
+    schema_changed = old_struct != new_struct
+    if schema_changed:
         old_fields = {f["name"]: f for f in schema_json["fields"]}
         old_by_name = {f.name: f for f in old_struct.fields}
         for f in new_struct.fields:
@@ -1739,32 +1651,33 @@ def sync_manifest_to_iceberg(table, dest: str,
         last_col = int(meta.get("last-column-id", 0))
         counter = iter(range(last_col + 1, last_col + 1 + (1 << 20)))
         fresh = spark_type_to_iceberg(new_struct, lambda: next(counter))
-        fields = []
-        for f in fresh["fields"]:
-            fields.append(old_fields.get(f["name"], f))
         new_schema_json = {
             "type": "struct",
             "schema-id": int(meta.get("current-schema-id", 0)) + 1,
-            "fields": fields,
+            "fields": [old_fields.get(f["name"], f)
+                       for f in fresh["fields"]],
         }
-        schema_changed = True
 
+    out = {"mode": "noop", "added": len(added), "removed": len(removed),
+           "rewritten_manifests": 0, "dv_updated": len(new_positions),
+           "version": m.get("version", 0),
+           "snapshot_id": snap.get("snapshot-id"), "files": len(src),
+           "rows": live_rows(m["entries"])}
     if not added and not removed and not schema_changed \
             and not new_positions:
-        return {"mode": "noop", "added": 0, "removed": 0,
-                "rewritten_manifests": 0, "dv_updated": 0,
-                "version": m.get("version", 0),
-                "snapshot_id": snap["snapshot-id"]}
+        return out
 
+    new_meta = dict(meta)
     # ---- identity partition spec (r8): new manifests carry r102
     # tuples; a pre-feature destination (empty spec) gets a proper
     # PARTITION SPEC EVOLUTION — a new spec-id appended, old manifests
-    # keep referencing theirs
-    specs = [dict(s) for s in meta.get("partition-specs")
-             or [{"spec-id": 0, "fields": []}]]
+    # keep referencing theirs. Genesis has no spec yet: its first spec
+    # is spec-id 0 (the spec-required empty spec when unpartitioned).
+    specs = [] if genesis else [
+        dict(s) for s in meta.get("partition-specs")
+        or [{"spec-id": 0, "fields": []}]]
     data_spec_id = int(meta.get("default-spec-id", 0))
-    spec_evolved = False
-    new_last_pid = None
+    spec_evolved = genesis
     spec_fields, entry_schema, part_val = _identity_partition(
         m, new_schema_json)
     if spec_fields:
@@ -1784,25 +1697,24 @@ def sync_manifest_to_iceberg(table, dest: str,
             data_spec_id = max((int(s["spec-id"]) for s in specs),
                                default=-1) + 1
             spec_evolved = True
-            new_last_pid = fid
+            new_meta["last-partition-id"] = fid
         spec_fields, entry_schema, part_val = _identity_partition(
             m, new_schema_json, field_id=fid)
-        if spec_evolved:
+        if match is None:
             specs.append({"spec-id": data_spec_id,
                           "fields": spec_fields})
+    if spec_evolved:
+        new_meta["partition-specs"] = specs or [{"spec-id": 0,
+                                                 "fields": []}]
+        new_meta["default-spec-id"] = data_spec_id
 
-    meta_dir = os.path.join(dest, "metadata")
+    os.makedirs(meta_dir, exist_ok=True)
     new_seq = int(meta.get("last-sequence-number", 0)) + 1
-    new_snap_id = max(s["snapshot-id"] for s in meta["snapshots"]) + 1
+    new_snap_id = max((s["snapshot-id"] for s in meta.get("snapshots")
+                       or []), default=0) + 1
+    tag = "00001" if genesis else f"sync{new_snap_id}"
     ts = int(m.get("committed_at", 0) or 0)
-
-    def _entry_seq(e, mf) -> int:
-        seq = e.get("data_sequence_number")
-        if seq is None:
-            seq = e.get("sequence_number")
-        if seq is None:
-            seq = mf.get("sequence_number") or 0
-        return int(seq)
+    fields_map = _fields_map(new_schema_json)
 
     new_list = list(delete_manifests)  # pos-delete manifests reused
     rewritten = 0
@@ -1827,8 +1739,7 @@ def sync_manifest_to_iceberg(table, dest: str,
             else:
                 kept_rows += n
             out_entries.append(rec)
-        mpath = os.path.join(
-            meta_dir, f"m-sync{new_snap_id}-{rewritten:05d}.avro")
+        mpath = os.path.join(meta_dir, f"m-{tag}-{rewritten:05d}.avro")
         # preserve partition tuples through the rewrite: entries that
         # carry r102 values need the partition-aware writer schema
         has_part = any(e["data_file"].get("partition")
@@ -1857,14 +1768,10 @@ def sync_manifest_to_iceberg(table, dest: str,
     if added:
         add_entries = []
         for rel in added:
-            src = os.path.join(table.path, rel)
-            dst = os.path.join(dest, rel)
-            _link_or_copy(src, dst)
-            lo_b, hi_b = _entry_bounds(
-                fields_map, src_by_path.get(rel) or {})
-            src_e = src_by_path.get(rel) or {}
+            dst = link_or_copy(table, dest, rel)
+            lo_b, hi_b = _entry_bounds(fields_map, src[rel])
             part = ({m["partition_by"]:
-                     part_val(src_e.get("partition"))}
+                     part_val(src[rel].get("partition"))}
                     if spec_fields else {})
             add_entries.append({
                 "status": 1, "snapshot_id": new_snap_id,
@@ -1872,12 +1779,13 @@ def sync_manifest_to_iceberg(table, dest: str,
                 "data_file": {
                     "content": 0, "file_path": dst,
                     "file_format": "PARQUET", "partition": part,
-                    "record_count": rows_by_path.get(rel, 0),
+                    "record_count": int(src[rel].get("rows") or 0),
                     "file_size_in_bytes": os.path.getsize(dst),
                     "lower_bounds": lo_b, "upper_bounds": hi_b,
                     "equality_ids": None,
                 }})
-        mpath = os.path.join(meta_dir, f"m-sync{new_snap_id}-added.avro")
+        mpath = os.path.join(meta_dir, "m-00001.avro" if genesis
+                             else f"m-{tag}-added.avro")
         av.write_container_file(mpath, entry_schema, add_entries)
         new_list.append({
             "manifest_path": mpath,
@@ -1896,14 +1804,12 @@ def sync_manifest_to_iceberg(table, dest: str,
         # the new sequence (applies to every data file: seq <= new_seq)
         dfile = _write_pos_delete_file(dest, new_positions)
         new_list.append(_delete_manifest_entry(
-            meta_dir, f"sync{new_snap_id}", dfile,
-            snap_id=new_snap_id, seq=new_seq))
+            meta_dir, tag, dfile, snap_id=new_snap_id, seq=new_seq))
 
     lpath = os.path.join(meta_dir, f"snap-{new_snap_id}.avro")
     av.write_container_file(lpath, json.dumps(MANIFEST_FILE_SCHEMA),
                             new_list)
 
-    new_meta = dict(meta)
     new_meta["last-sequence-number"] = new_seq
     new_meta["last-updated-ms"] = ts
     new_meta["current-snapshot-id"] = new_snap_id
@@ -1912,37 +1818,27 @@ def sync_manifest_to_iceberg(table, dest: str,
     new_meta["refs"] = {**(meta.get("refs") or {}),
                         "main": {"snapshot-id": new_snap_id,
                                  "type": "branch"}}
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
+    new_snap = {
         "snapshot-id": new_snap_id,
-        "parent-snapshot-id": snap.get("snapshot-id"),
         "sequence-number": new_seq, "timestamp-ms": ts,
         "manifest-list": lpath,
-        "summary": {"operation": "overwrite" if (removed or new_positions)
-                    else "append"},
+        # genesis deletes only hit rows added in the same snapshot
+        "summary": {"operation": "overwrite" if not genesis
+                    and (removed or new_positions) else "append"},
         "schema-id": new_schema_json.get("schema-id", 0),
-    }]
+    }
+    if snap:
+        new_snap["parent-snapshot-id"] = snap["snapshot-id"]
+    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [new_snap]
     if schema_changed:
         new_meta["schemas"] = list(meta.get("schemas") or []) \
             + [new_schema_json]
         new_meta["current-schema-id"] = new_schema_json["schema-id"]
-        ids = [f["id"] for f in new_schema_json["fields"]]
-        new_meta["last-column-id"] = max(
-            int(meta.get("last-column-id", 0)), max(ids, default=0))
-    if spec_evolved:
-        new_meta["partition-specs"] = specs
-        new_meta["default-spec-id"] = data_spec_id
-        new_meta["last-partition-id"] = new_last_pid
-
-    num = _META_NUM_RE.match(os.path.basename(meta_file))
-    next_v = int(num.group(1)) + 1 if num else 2
-    with open(os.path.join(meta_dir, f"v{next_v}.metadata.json"), "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(next_v))
-    return {"mode": "incremental", "added": len(added),
-            "removed": len(removed), "rewritten_manifests": rewritten,
-            "dv_updated": len(new_positions),
-            "version": m.get("version", 0), "snapshot_id": new_snap_id}
+        new_meta["last-column-id"] = next(counter) - 1
+    _write_metadata(meta_dir, meta_file, new_meta)
+    out.update(mode="full" if genesis else "incremental",
+               rewritten_manifests=rewritten, snapshot_id=new_snap_id)
+    return out
 
 
 def vacuum_iceberg_export(spark: SparkSession, dest: str,
@@ -1967,43 +1863,10 @@ def vacuum_iceberg_export(spark: SparkSession, dest: str,
 
     Returns {"removed": n, "kept_live": n, "kept_grace": n}.
     """
-    import time as _time
-
-    t = IcebergLiteTable(spark, dest)
-    inv = t.file_inventory()
-    live = {
-        os.path.normpath(r["path"])
-        for key in ("data", "pos_deletes", "eq_deletes")
-        for r in inv[key]
-    }
-    root = os.path.abspath(dest)
-    meta_dir = os.path.normpath(os.path.join(root, "metadata"))
-    now = int(_time.time() * 1000) if now_ms is None else int(now_ms)
-    removed = kept_live = kept_grace = 0
-    for dp, dirs, fs in os.walk(root):
-        dirs[:] = [d for d in dirs
-                   if os.path.normpath(os.path.join(dp, d)) != meta_dir
-                   and not d.startswith(".")]
-        for f in fs:
-            if f.startswith(".") or f.startswith("_"):
-                continue
-            p = os.path.normpath(os.path.join(dp, f))
-            if p in live:
-                kept_live += 1
-            elif now - int(os.path.getmtime(p) * 1000) < grace_ms:
-                kept_grace += 1
-            else:
-                os.remove(p)
-                removed += 1
-    for dp, dirs, fs in os.walk(root, topdown=False):
-        if dp != root and not dirs and not fs \
-                and not os.path.normpath(dp).startswith(meta_dir):
-            try:
-                os.rmdir(dp)
-            except OSError:
-                pass
-    return {"removed": removed, "kept_live": kept_live,
-            "kept_grace": kept_grace}
+    inv = IcebergLiteTable(spark, dest).file_inventory()
+    live = {r["path"] for key in ("data", "pos_deletes", "eq_deletes")
+            for r in inv[key]}
+    return vacuum_dest(dest, live, "metadata", grace_ms, now_ms)
 
 
 def expire_iceberg_export_snapshots(spark: SparkSession, dest: str,
@@ -2078,12 +1941,6 @@ def expire_iceberg_export_snapshots(spark: SparkSession, dest: str,
             n: r for n, r in meta["refs"].items()
             if r.get("snapshot-id") in kept_ids
         }
-    meta_dir = os.path.join(dest, "metadata")
-    num = _META_NUM_RE.match(os.path.basename(meta_file))
-    next_v = int(num.group(1)) + 1 if num else 2
-    with open(os.path.join(meta_dir, f"v{next_v}.metadata.json"), "w") as fh:
-        json.dump(new_meta, fh)
-    with open(os.path.join(meta_dir, "version-hint.text"), "w") as fh:
-        fh.write(str(next_v))
+    _write_metadata(t.meta_dir, meta_file, new_meta)
     return {"expired": len(expired), "kept": len(kept),
             "metadata_files_removed": removed}

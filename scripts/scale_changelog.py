@@ -11,8 +11,9 @@ feed) and record the planner's own scan-set stats. If the changelog
 were O(table), wall time and scan counts would grow with N; the claim
 is they stay flat while a FULL-table read grows.
 
-Writes SCALE_CHANGELOG_r8.json at the repo root. Run on a quiet box:
-    python scripts/scale_changelog.py
+Prints the result as one JSON object on stdout (SCALE_CHANGELOG_r8.json
+at the repo root holds a recorded run). Run on a quiet box:
+    python scripts/scale_changelog.py > scale_changelog.json
 """
 
 from __future__ import annotations
@@ -94,14 +95,9 @@ def main() -> None:
                 "full_read_s": round(full_t, 4),
             }
             out["rungs"].append(rung)
-            print(json.dumps(rung))
         finally:
             shutil.rmtree(root, ignore_errors=True)
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "SCALE_CHANGELOG_r8.json")
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(f"wrote {path}")
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

@@ -12,8 +12,9 @@ log replay the read plans from) three ways:
   - with_ckpt: the auto-written checkpoints honored (ckpt + tail),
 and record the JSON-commit count each replay actually opened.
 
-Writes SCALE_DELTA_r8.json at the repo root. Run on a quiet box:
-    python scripts/scale_delta_ckpt.py
+Prints the result as one JSON object on stdout (SCALE_DELTA_r8.json at
+the repo root holds a recorded run). Run on a quiet box:
+    python scripts/scale_delta_ckpt.py > scale_delta.json
 """
 
 from __future__ import annotations
@@ -106,7 +107,6 @@ def main() -> None:
                 time_snapshot(spark, dest, suppress_ckpt=False), 4),
         }
         out["rungs"].append(row)
-        print(json.dumps(row), flush=True)
 
     # external replay correctness at the top rung, both paths
     got_ck = {tuple(r) for r in DeltaLiteTable(spark, dest).read()
@@ -114,12 +114,8 @@ def main() -> None:
     want = {tuple(r) for r in t.read().select("k", "p", "v").collect()}
     out["top_rung_replay_matches_source"] = bool(got_ck == want)
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "SCALE_DELTA_r8.json"), "w") as fh:
-        json.dump(out, fh, indent=1)
-        fh.write("\n")
-    print(json.dumps({"ok": out["top_rung_replay_matches_source"]}))
     shutil.rmtree(root, ignore_errors=True)
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":
