@@ -52,6 +52,30 @@ rows must carry the partition value their key lives in. A key that
 "moves" partitions inserts into the new one and leaves the old row;
 callers that allow moving keys must merge on (partition, key).
 
+The keyed commit: ``merge(b)`` is ``apply_changes(b, None)`` and
+``delete_keys(k)`` is ``apply_changes(None, k)``, each under its own
+operation name; a predicate ``delete`` is the same tail behind a
+predicate scope. The PROBE (``_probe_sides``) collects, per side,
+``distinct().limit(bound + 1)`` over the partition token, bucket cell,
+prune-eligible key columns and bloom positions — sides of one probe
+shape in ONE action — and yields emptiness, touched tokens, the scope
+(touched partitions, cut to touched cells, then by key zone maps and
+blooms) and, when bounded, the distinct key tuples that become a local
+broadcast key frame. A tombstone side without the partition column
+probes its keys only and scopes the whole live set. The TAIL
+(``_mask_or_rewrite``) either masks ``drop(live scope rows)`` with
+deletion vectors and appends the upserts (``use_dv``, operation
+``<op>+dv``: per-file row positions in a sidecar, the Delta DV / Iceberg
+v2 positional-delete shape — no existing file is rewritten, readers
+anti-join the masks and ``compact()`` folds them away), or rewrites the
+scope as ``keep(scope rows) ∪ upserts``. Noop rule: no commit (version
+unchanged, ``touched_partitions`` empty) when nothing is masked,
+rewritten or appended — every side empty, or an empty scope with
+nothing to append, or a dv pass that hit nothing and appends nothing.
+OCC tokens: the pruned sides' probe tokens, plus the partitions of the
+masked, rewritten and written files; ``max_retries`` runs the shared
+rebase loop (``_occ``) over them.
+
 Partition directory tokens: the partition column is *duplicated* into a
 string column ``__fsp__`` for ``partitionBy`` so the real column stays
 inside the data files (plain ``partitionBy`` would strip it and make
@@ -70,6 +94,7 @@ key dimension and zone maps / blooms for everything else.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
@@ -279,6 +304,15 @@ class ManifestTable:
     manifest, with atomic commits, partition-pruned MERGE/DELETE,
     snapshot reads, and vacuum."""
 
+    # max distinct merge keys collected for point-set file pruning
+    # (driver memory bound; larger batches prune by interval). 64k
+    # tuples is a few MB of driver state (bisect keeps the per-file zone
+    # test O(log n)); the bounded path answers scope, broadcast-
+    # eligibility AND pruning from ONE distinct job where the overflow
+    # path pays three (probe + touched-tokens + interval agg) —
+    # optimization r8, guide §1.2. Tests lower it per instance.
+    _PRUNE_KEYS_BOUND = 65536
+
     def __init__(self, spark: SparkSession, root: str, table: str):
         self.spark = spark
         self.root = root
@@ -289,17 +323,6 @@ class ManifestTable:
         self.segment_target = SEGMENT_TARGET_ENTRIES
         self.dv_broadcast_rows = DV_BROADCAST_ROWS
         self.dv_ratio_warn = DV_RATIO_WARN
-        # max distinct merge keys collected for point-set file pruning
-        # (driver memory bound; larger batches prune by interval).
-        # 64k tuples is a few MB of driver state (bisect keeps the
-        # per-file zone test O(log n)); the bounded path answers scope,
-        # broadcast-eligibility AND pruning from ONE distinct job where
-        # the overflow path pays three (probe + touched-tokens +
-        # interval agg) — optimization r8, guide §1.2. Env-tunable for
-        # constrained drivers.
-        self._PRUNE_KEYS_BOUND = int(
-            os.environ.get("SPARK_GRAFT_PRUNE_KEYS_BOUND", "65536")
-        )
         # bloom probe tuples are tested per (file × probe) driver-side,
         # so they keep the tighter classic bound
         self._BLOOM_PROBES_BOUND = 4096
@@ -1624,6 +1647,7 @@ class ManifestTable:
             **computed.get("stats", {}),
         }
 
+    # -- the keyed commit (module docstring) -------------------------------
     def merge(
         self,
         source: DataFrame,
@@ -1632,71 +1656,255 @@ class ManifestTable:
         max_retries: int = 0,
         use_dv: bool = False,
     ) -> dict:
-        """Upsert `source` by key: rewrite ONLY the partitions the source
-        batch lands in; carry every other partition's files by reference.
-        Matched keys are replaced by the source row (reference DELETE IN +
-        INSERT, mysql.rb:82-87); unmatched source rows insert.
-
-        ``use_dv=True`` drops write amplification further: matched rows
-        are masked by DELETION VECTORS (per-file row positions in a dv
-        sidecar, the Delta DV / Iceberg v2 positional-delete shape) and
-        source rows append as new files — NO existing data file is
-        rewritten at all, so a merge costs O(batch + touched-partition
-        scan) in IO-read and O(batch + |matches|) in IO-write. Readers
-        anti-join the dv at scan time; ``compact()`` materializes dvs
-        away when a partition accumulates too many.
-
-        Optimistic concurrency (``max_retries > 0``): see ``_occ`` —
-        disjoint-partition losers rebase with zero recompute."""
-        compute_fn = self._compute_merge_dv if use_dv else self._compute_merge
-        return self._occ(
-            lambda cur: compute_fn(cur, source, on, broadcast_threshold),
-            max_retries,
+        """Upsert ``source`` by key: matched keys are replaced by the
+        source row (reference DELETE IN + INSERT, mysql.rb:82-87);
+        unmatched source rows insert. ``apply_changes(source, None)``
+        committed as ``merge``; scope, ``use_dv``, the noop rule and OCC
+        tokens are the keyed commit's (module docstring)."""
+        return self._keyed_commit(
+            source, None, on, use_dv, broadcast_threshold, max_retries, "merge"
         )
 
-    def _merge_scope(
-        self, cur: dict, source: DataFrame, pk: list[str]
-    ) -> tuple[list[str], list[dict], bool]:
-        """(touched tokens, old): `old` is the minimal file set a merge
-        must consult — the source partitions, cut to the key-hash CELLS
-        the source keys land in when the table is bucketed on a
-        merge-key column, further cut by merge-key ZONE-MAP pruning (a
-        file whose recorded [min, max] on any key column cannot hold a
-        batch key provably holds no equi-join match, so it carries by
-        reference unscanned — the Delta MERGE prune shape). For a
-        bounded batch ONE distinct job answers all the scope questions
-        at once: touched partitions, touched cells, the key point set,
-        AND (when the table blooms a key column) each key's bloom probe
-        positions — so bloom membership prunes files INSIDE overlapping
-        key ranges, where hash-distributed keys make zone maps useless;
-        past ``_PRUNE_KEYS_BOUND`` the coarse scope re-collects without
-        the key columns and pruning falls back to one [min, max]
-        interval per key. Only touched partitions'
-        metadata segments are parsed; untouched files are carried by
-        segment reference at commit time, never listed here. Driver
-        state stays bounded by the probe limit."""
-        sel, prune_cols, bl_cols, k_hash = self._scope_prep(cur, source, pk)
-        rows = None
-        if sel:
-            with _probe_conf(self.spark):
-                probe = (
-                    source.select(*sel).distinct()
-                    .limit(self._PRUNE_KEYS_BOUND + 1).collect()
+    def delete_keys(
+        self,
+        keys: DataFrame,
+        on: str | list[str],
+        use_dv: bool = True,
+        broadcast_threshold: int = 2_000_000,
+        max_retries: int = 0,
+    ) -> dict:
+        """Set-based delete: remove every live row whose key appears in
+        ``keys`` (the GDPR purge-list / CDC tombstone shape — a
+        DataFrame, never a driver-side literal list).
+        ``apply_changes(None, keys)`` committed as ``delete``; ``keys``
+        without the partition column scope the whole live set (module
+        docstring). Default is deletion vectors."""
+        return self._keyed_commit(
+            None, keys, on, use_dv, broadcast_threshold, max_retries, "delete"
+        )
+
+    def apply_changes(
+        self,
+        upserts: DataFrame,
+        tombstones: DataFrame | None,
+        on: str | list[str],
+        use_dv: bool = True,
+        broadcast_threshold: int = 2_000_000,
+        max_retries: int = 0,
+    ) -> dict:
+        """Apply a CDC batch — upsert rows AND tombstone keys — as ONE
+        atomic commit (the CDC-replication apply shape). Compared to a
+        merge followed by delete_keys this halves version churn and,
+        more importantly, removes the window where a reader sees the
+        batch's inserts without its deletes: readers observe whole
+        batches or nothing.
+
+        ``tombstones`` holds the key columns, plus optionally the
+        table's partition/bucket columns for a pruned delete scope.
+        Default is deletion vectors: matched and tombstoned rows are
+        masked (zero rewrites), upserts append as new files. The probe,
+        the tail, the noop rule and the OCC tokens are the keyed
+        commit's (module docstring)."""
+        return self._keyed_commit(
+            upserts, tombstones, on, use_dv, broadcast_threshold, max_retries,
+            "apply-changes",
+        )
+
+    def _keyed_commit(
+        self,
+        upserts: DataFrame | None,
+        tombstones: DataFrame | None,
+        on: str | list[str],
+        use_dv: bool,
+        broadcast_threshold: int,
+        max_retries: int,
+        op: str,
+    ) -> dict:
+        pk = [on] if isinstance(on, str) else list(on)
+
+        def compute(cur: dict) -> dict:
+            sides = self._probe_sides(cur, [upserts, tombstones], pk)
+            # (frame, touched tokens, scope entries, pk rows) per non-empty side
+            live = [
+                (df, *side[1:])
+                for df, side in zip((upserts, tombstones), sides) if side[0]
+            ]
+            have_ups = sides[0][0]
+            cur_schema = T.StructType.fromJson(cur["schema"])
+            schema = (
+                cur_schema if upserts is None
+                else _merge_schemas(cur_schema, upserts.schema)
+            )
+            if have_ups:
+                self._enforce_constraints(
+                    cur.get("constraints"), upserts, op.replace("-", "_")
                 )
-            if len(probe) <= self._PRUNE_KEYS_BOUND:
-                rows = probe
-        return self._scope_from_rows(
-            cur, source, pk, prune_cols, bl_cols, k_hash, rows
-        )
+            # combined scope: each side's cells, each file listed once
+            scope = {e["path"]: e for side in live for e in side[2]}
+            keys = None
+            if live:
+                # one key frame masks both classes: upserted keys
+                # (replaced by the new rows) and tombstoned keys (just
+                # removed), cast to the table's key dtypes; every side's
+                # probe bounded -> their driver-side union, deduped
+                # (order-stable) into a local relation with zero jobs
+                rows = [side[3] for side in live]
+                combined = (
+                    None if None in rows
+                    else list(dict.fromkeys(t for r in rows for t in r))
+                )
+                raw = live[0][0] if len(live) == 1 else functools.reduce(
+                    DataFrame.unionByName, [side[0].select(*pk) for side in live]
+                )
+                rf = {f.name: f.dataType for f in raw.schema.fields}
+                tf = {f.name: f.dataType for f in schema.fields}
+                target = raw if all(rf[k] == tf[k] for k in pk) else raw.select(
+                    *[F.col(k).cast(tf[k]).alias(k) for k in pk]
+                )
+                keys = self._key_frame(
+                    combined, raw, target, pk, broadcast_threshold
+                )
+            return self._mask_or_rewrite(
+                cur, schema, list(scope.values()),
+                {p for side in live for p in side[1]},
+                lambda df: df.join(keys, pk, "left_semi"),
+                lambda df: df.join(keys, pk, "left_anti"),
+                _align(upserts, schema) if have_ups else None,
+                use_dv, op,
+            )
+
+        return self._occ(compute, max_retries)
+
+    @staticmethod
+    def _noop(cur: dict) -> dict:
+        return {
+            "noop": {"version": cur["version"], "touched_partitions": [],
+                     "files_rewritten": 0, "files_written": 0,
+                     "rows_masked": 0}
+        }
+
+    def _mask_or_rewrite(
+        self, cur: dict, schema: T.StructType, old: list[dict],
+        touched: set[str] | list[str], drop, keep, append: DataFrame | None,
+        use_dv: bool, op: str,
+    ) -> dict:
+        """The keyed commit's one tail (module docstring). dv mode masks
+        ``drop(live scope rows)`` and appends ``append``; rewrite mode
+        writes ``keep(scope rows aligned to schema) ∪ append`` in place
+        of the scope. ``touched`` are the pruned sides' probe tokens."""
+        if not old and append is None:
+            return self._noop(cur)
+        cur_schema = T.StructType.fromJson(cur["schema"])
+        part, bucket = cur["partition_by"], cur.get("bucket_by")
+        if use_dv:
+            gone, masked = [], 0
+            if old:
+                hits = drop(
+                    self._read_entries(old, cur_schema, keep_ref=True)
+                ).select(F.col("__ref").alias("file_ref"), F.col("__pos").alias("pos"))
+                gone, _paths, _parts, masked = self._dv_masked_entries(old, hits)
+            written = (
+                [] if append is None
+                else self._write_snapshot(append, part, bucket_by=bucket)
+            )
+            if not gone and not written:
+                return self._noop(cur)
+            stats = {
+                "files_rewritten": 0,  # old files stay live under dv masks
+                "files_written": len(written),  # appended only
+                "files_scanned": len(old),  # after key zone-map pruning
+                "rows_masked": masked,
+            }
+        else:
+            out = keep(_align(self._read_entries(old, cur_schema), schema))
+            if append is not None:
+                out = out.unionByName(append)
+            written = self._write_snapshot(out, part, bucket_by=bucket)
+            gone = old
+            stats = {"files_rewritten": len(old), "files_written": len(written)}
+        return {
+            "operation": f"{op}+dv" if use_dv else op,
+            "schema": schema,
+            "touched": sorted(
+                set(touched) | {e["partition"] or "" for e in gone + written}
+            ),
+            # masked entries keep their paths: either way the commit
+            # replaces exactly the files in ``gone``
+            "replaced": {e["path"] for e in gone},
+            "entries": (gone if use_dv else []) + written,
+            "stats": stats,
+        }
+
+    def _probe_sides(
+        self, cur: dict, frames: list[DataFrame | None], pk: list[str]
+    ) -> list[tuple[bool, list[str], list[dict], list | None]]:
+        """The keyed commit's one scope probe: per frame of ``frames``
+        (``[upserts, tombstones]``, either may be None) the tuple
+        (non-empty, touched tokens, scope entries, distinct pk tuples or
+        None). The scope is the minimal file set a side must consult —
+        its partitions, cut to the key-hash CELLS its keys land in when the
+        table is bucketed on a key column, further cut by key ZONE-MAP
+        and bloom pruning (``_scope_prep`` / ``_scope_from_rows``).
+
+        Each frame probes ``distinct().limit(bound + 1)`` of its probe
+        columns under a ``__side`` tag (so emptiness always comes from
+        the probe, and per-side boundedness stays exact); frames whose
+        probe columns agree in names and types are unioned and collected
+        in ONE action under ``_probe_conf`` — their shuffle stages run
+        concurrently — and a frame of another shape gets its own. A
+        tombstone frame without the partition column probes its key
+        columns only and scopes the whole live set, with no tokens."""
+        bound = self._PRUNE_KEYS_BOUND
+        keys_only = {**cur, "partition_by": None, "bucket_by": None, "bloom": None}
+        preps: dict[int, tuple] = {}
+        groups: dict[tuple, list[DataFrame]] = {}
+        for i, df in enumerate(frames):
+            if df is None:
+                continue
+            full = i > 0 and cur["partition_by"] not in (None, *df.columns)
+            prep = self._scope_prep(keys_only if full else cur, df, pk)
+            # the probe columns' names and types, read off the prep (no
+            # analysis round trip): layout columns, then the key columns
+            # with the frame's own dtypes, then bloom positions
+            dtypes = {f.name: f.dataType for f in df.schema.fields}
+            shape = (full, tuple(prep[2]),
+                     tuple((k, dtypes[k]) for k, _n in prep[1]))
+            q = df.select(F.lit(i).alias("__side"), *prep[0])
+            groups.setdefault(shape, []).append(q.distinct().limit(bound + 1))
+            preps[i] = (full, prep)
+        rows: dict[int, list] = {i: [] for i in preps}
+        with _probe_conf(self.spark):
+            for qs in groups.values():
+                for r in functools.reduce(DataFrame.unionByName, qs).collect():
+                    rows[r["__side"]].append(r)
+        out = []
+        for i, df in enumerate(frames):
+            got = rows.get(i)
+            if not got:
+                out.append((False, [], [], []))
+                continue
+            full, (_sel, prune_cols, bl_cols, k_hash) = preps[i]
+            bounded = got if len(got) <= bound else None
+            if full:
+                pk_rows = self._pk_rows(bounded, prune_cols, pk)
+                out.append((True, [], self._m_entries(cur), pk_rows))
+            else:
+                out.append((True, *self._scope_from_rows(
+                    cur, df, pk, prune_cols, bl_cols, k_hash, bounded
+                )))
+        return out
 
     def _scope_prep(
         self, cur: dict, source: DataFrame, pk: list[str]
     ) -> tuple[list, list[tuple[str, bool]], list[tuple[int, str]], int]:
-        """The probe SELECT list for ``_merge_scope`` (partition token,
+        """The probe SELECT list for ``_probe_sides`` (partition token,
         bucket cell, prune-eligible key columns, bloom probe positions)
-        plus the metadata needed to interpret its rows. Split out so
-        ``apply_changes`` can run ONE union probe over both of its
-        sides (``_paired_scope_probe``) instead of two."""
+        plus the metadata needed to interpret its rows. For a bounded
+        batch ONE distinct job answers all the scope questions at once:
+        touched partitions, touched cells, the key point set, AND (when
+        the table blooms a key column) each key's bloom probe positions
+        — so bloom membership prunes files INSIDE overlapping key
+        ranges, where hash-distributed keys make zone maps useless."""
         partition_by = cur["partition_by"]
         bucket_by = cur.get("bucket_by")
         bucketed = bool(bucket_by) and bucket_by[0] in pk
@@ -1755,17 +1963,22 @@ class ManifestTable:
         k_hash: int,
         rows: list | None,
     ) -> tuple[list[str], list[dict], list | None]:
-        """Scope derivation from an already-collected (or overflowed:
-        ``rows is None``) probe — the second half of ``_merge_scope``.
-        On overflow the bucketed/unbucketed branches re-collect a
-        coarse cell/bucket probe, exactly as before the split."""
+        """(touched tokens, scope entries, pk rows) from an
+        already-collected (or overflowed: ``rows is None``) probe. A
+        file whose recorded [min, max] on any key column cannot hold a
+        batch key provably holds no equi-join match, so it carries by
+        reference unscanned (the Delta MERGE prune shape). On overflow
+        the bucketed/unbucketed branches re-collect a coarse cell/bucket
+        probe and pruning falls back to one [min, max] interval per key.
+        Only touched partitions' metadata segments are parsed; driver
+        state stays bounded by the probe limit."""
         partition_by = cur["partition_by"]
         bucket_by = cur.get("bucket_by")
         bucketed = bool(bucket_by) and bucket_by[0] in pk
-        # distinct-tuple count PROVEN by the probe (snapshot before the
-        # overflow branches below reassign ``rows`` to a coarse collect
-        # that says nothing about key distinctness — ADVICE r8 high)
-        probe_keys = len(rows) if rows is not None else None
+        # the probe's own rows (snapshot before the overflow branches
+        # below reassign ``rows`` to a coarse collect that says nothing
+        # about key distinctness — ADVICE r8 high)
+        probe_rows = rows
 
         # point-set checks: (col, numeric, sorted batch values). A
         # single interval can't cut the mixed update+insert CDC batch
@@ -1869,83 +2082,27 @@ class ManifestTable:
             old = [
                 e for e in old if self._bloom_scope_survives(e, bloom_checks)
             ]
-        # pk_rows: the probe proved the batch has a bounded distinct key
-        # set AND collected it — every pk column rode the probe verbatim
-        # (partition rides cast-to-string and bucket rides hashed, so
-        # neither bounds raw key distinctness on its own), so the
-        # distinct pk tuples are already on the driver. Returning them
-        # (instead of a bool) lets callers build the join's key frame as
-        # a LOCAL relation: no second distinct scan over the batch, no
-        # broadcast-build job — and lets each caller gate the broadcast
-        # on its own ``broadcast_threshold`` (the probe bound and the
-        # broadcast bound are independently tunable, ADVICE r8 high).
-        # Valid only when the PROBE itself stayed bounded: on overflow
-        # the bucketed branches above reassign ``rows`` to a coarse
-        # cell/bucket collect that says nothing about key distinctness
-        # (``rows is not None`` was spuriously truthy there).
-        if probe_keys is not None and set(pk) <= {k for k, _n in prune_cols}:
-            idx = {k: i for i, (k, _n) in enumerate(prune_cols)}
-            seen: set = set()
-            pk_rows: list[tuple] = []
-            for r in rows:
-                tup = tuple(r[f"__k{idx[k]}"] for k in pk)
-                if tup not in seen:
-                    seen.add(tup)
-                    pk_rows.append(tup)
-            return touched, old, pk_rows
-        return touched, old, None
+        return touched, old, self._pk_rows(probe_rows, prune_cols, pk)
 
-    def _paired_scope_probe(
-        self, cur: dict, ups: DataFrame, tombs: DataFrame, pk: list[str]
-    ):
-        """ONE Spark action answers apply_changes' four batch questions
-        (upserts empty? tombstones empty? each side's merge scope?) that
-        previously cost two ``isEmpty`` jobs plus two ``_merge_scope``
-        probe collects (optimization r9, guide §1.2 / VERDICT r8 item
-        2). The two sides keep their OWN ``distinct().limit(bound+1)``
-        subtree — per-side boundedness and emptiness stay exactly as
-        precise as the separate probes (a side is empty iff it
-        contributes zero probe rows; bounded iff ≤ bound) — and the
-        union is collected once, so the independent shuffle stages run
-        concurrently inside one action instead of as four sequential
-        jobs. Scope-widening rejected in r8 does NOT apply: rows carry a
-        ``__side`` tag, so each side's scope is derived from its own
-        tuples only.
-
-        Returns ``None`` when the sides' probe column structure differs
-        (different prune-eligible columns / bloom eligibility — the
-        union would coerce types) or either side has no probe columns;
-        the caller falls back to the separate-probe path."""
-        sel_u, pc_u, bl_u, kh = self._scope_prep(cur, ups, pk)
-        sel_t, pc_t, bl_t, _kh_t = self._scope_prep(cur, tombs, pk)
-        if not sel_u or not sel_t:
+    @staticmethod
+    def _pk_rows(
+        rows: list | None, prune_cols: list[tuple[str, bool]], pk: list[str]
+    ) -> list[tuple] | None:
+        """The distinct pk tuples of a bounded probe (``rows`` not None)
+        in which every pk column rode verbatim — partition rides
+        cast-to-string and bucket rides hashed, so neither bounds raw key
+        distinctness on its own — else None. Returning the tuples lets
+        the keyed commit build its key frame as a LOCAL relation: no
+        second distinct scan over the batch, no broadcast-build job, and
+        the broadcast gated on the caller's own ``broadcast_threshold``
+        (the probe bound and the broadcast bound are independently
+        tunable, ADVICE r8 high)."""
+        if rows is None or not set(pk) <= {k for k, _n in prune_cols}:
             return None
-        if pc_u != pc_t or bl_u != bl_t or len(sel_u) != len(sel_t):
-            return None
-        bound = self._PRUNE_KEYS_BOUND
-        with _probe_conf(self.spark):
-            probe = (
-                ups.select(F.lit(0).alias("__side"), *sel_u)
-                .distinct()
-                .limit(bound + 1)
-                .unionByName(
-                    tombs.select(F.lit(1).alias("__side"), *sel_t)
-                    .distinct()
-                    .limit(bound + 1)
-                )
-                .collect()
-            )
-        rows_u = [r for r in probe if r["__side"] == 0]
-        rows_t = [r for r in probe if r["__side"] == 1]
-        scope_u = self._scope_from_rows(
-            cur, ups, pk, pc_u, bl_u, kh,
-            rows_u if len(rows_u) <= bound else None,
+        idx = {k: i for i, (k, _n) in enumerate(prune_cols)}
+        return list(
+            dict.fromkeys(tuple(r[f"__k{idx[k]}"] for k in pk) for r in rows)
         )
-        scope_t = self._scope_from_rows(
-            cur, tombs, pk, pc_t, bl_t, kh,
-            rows_t if len(rows_t) <= bound else None,
-        )
-        return bool(rows_u), bool(rows_t), scope_u, scope_t
 
     def _prune_eligible(
         self, cur: dict, source: DataFrame, pk: list[str]
@@ -2088,37 +2245,6 @@ class ManifestTable:
             if all(self._file_matches(e, k, b, num) for k, b, num in bounds)
         ]
 
-    def _compute_merge(
-        self, cur: dict, source: DataFrame, on, broadcast_threshold: int
-    ) -> dict:
-        partition_by = cur["partition_by"]
-        bucket_by = cur.get("bucket_by")
-        schema = _merge_schemas(
-            T.StructType.fromJson(cur["schema"]), source.schema
-        )
-        pk = [on] if isinstance(on, str) else list(on)
-        self._enforce_constraints(cur.get("constraints"), source, "merge")
-        touched, old, pk_rows = self._merge_scope(cur, source, pk)
-        cur_schema = T.StructType.fromJson(cur["schema"])
-        existing = self._read_entries(old, cur_schema)
-        src = _align(source, schema)
-        keys = self._key_frame(pk_rows, source, src, pk, broadcast_threshold)
-        survivors = _align(existing, schema).join(keys, pk, "left_anti")
-        entries = self._write_snapshot(
-            survivors.unionByName(src), partition_by, bucket_by=bucket_by
-        )
-        return {
-            "operation": "merge",
-            "schema": schema,
-            "touched": touched,
-            "replaced": {e["path"] for e in old},
-            "entries": entries,
-            "stats": {
-                "files_rewritten": len(old),
-                "files_written": len(entries),
-            },
-        }
-
     def _dv_masked_entries(
         self, scope: list[dict], hits: DataFrame
     ) -> tuple[list[dict], list[str], list[str], int]:
@@ -2191,402 +2317,28 @@ class ManifestTable:
         masked = sum(new_counts[probe[e["path"]]] for e in hit_entries)
         return updated, [e["path"] for e in hit_entries], touched, masked
 
-    def _compute_merge_dv(
-        self, cur: dict, source: DataFrame, on, broadcast_threshold: int
-    ) -> dict:
-        """Merge without rewriting any existing file: mask matched rows
-        via deletion vectors, append the source batch as new files."""
-        partition_by = cur["partition_by"]
-        bucket_by = cur.get("bucket_by")
-        schema = _merge_schemas(T.StructType.fromJson(cur["schema"]), source.schema)
-        pk = [on] if isinstance(on, str) else list(on)
-        self._enforce_constraints(cur.get("constraints"), source, "merge")
-        touched, old, pk_rows = self._merge_scope(cur, source, pk)
-        cur_schema = T.StructType.fromJson(cur["schema"])
-        existing = self._read_entries(old, cur_schema, keep_ref=True)
-        src = _align(source, schema)
-        keys = self._key_frame(pk_rows, source, src, pk, broadcast_threshold)
-        matched = existing.join(keys, pk, "left_semi").select(
-            F.col("__ref").alias("file_ref"), F.col("__pos").alias("pos")
-        )
-        updated, hit_paths, _parts, masked = self._dv_masked_entries(old, matched)
-        new_entries = self._write_snapshot(src, partition_by, bucket_by=bucket_by)
-        return {
-            "operation": "merge+dv",
-            "schema": schema,
-            "touched": touched,
-            "replaced": set(hit_paths),
-            "entries": updated + new_entries,
-            "stats": {
-                "files_rewritten": 0,  # old files stay live under dv masks
-                "files_written": len(new_entries),  # appended only
-                "files_scanned": len(old),  # after key zone-map pruning
-                "rows_masked": masked,
-            },
-        }
-
     def delete(self, predicate, use_dv: bool = False, max_retries: int = 0) -> dict:
-        """Delete rows matching a Column predicate, rewriting only the
-        partitions that contain matches (the GDPR-delete shape).
-        ``use_dv=True`` rewrites NOTHING: matching live-row positions are
-        recorded as deletion vectors (one small sidecar write, O(|hits|))
-        and every data file carries by reference — the right shape when
-        deletes are sparse relative to partition size. Rows where the
-        predicate evaluates NULL are KEPT (SQL DELETE semantics) in both
-        modes. ``max_retries``: the shared OCC rebase loop (``_occ``)."""
-        def compute(cur: dict) -> dict:
-            if use_dv:
-                return self._compute_delete_dv(cur, predicate)
-            return self._compute_delete(cur, predicate)
-
-        return self._occ(compute, max_retries)
-
-    def _compute_delete(self, cur: dict, predicate) -> dict:
-        partition_by = cur["partition_by"]
-        schema = T.StructType.fromJson(cur["schema"])
-        if partition_by:
-            full = self._read_entries(self._m_entries(cur), schema)
-            touched = self._touched_tokens(full.filter(predicate), partition_by)
-            old = self._m_entries(cur, set(touched))
-        else:
-            touched = [""]
-            old = self._m_entries(cur)
-        scoped = self._read_entries(old, schema)
-        # NULL-safe survivor filter: a NULL predicate row is NOT deleted
-        # (matches SQL DELETE and the dv path's filter(predicate))
-        survivors = scoped.filter(~F.coalesce(predicate, F.lit(False)))
-        entries = self._write_snapshot(
-            survivors, partition_by, bucket_by=cur.get("bucket_by")
-        )
-        return {
-            "operation": "delete",
-            "schema": schema,
-            "touched": touched,
-            "replaced": {e["path"] for e in old},
-            "entries": entries,
-            "stats": {
-                "files_rewritten": len(old),
-                "files_written": len(entries),
-            },
-        }
-
-    def _compute_delete_dv(self, cur: dict, predicate) -> dict:
-        """Positional delete: one dv-aware scan (with predicate pushdown)
-        finds matching live rows; their (file, position) pairs commit as
-        a dv sidecar attached to the covered entries."""
-        schema = T.StructType.fromJson(cur["schema"])
-        all_entries = self._m_entries(cur)
-        live = self._read_entries(all_entries, schema, keep_ref=True)
-        hits = live.filter(predicate).select(
-            F.col("__ref").alias("file_ref"), F.col("__pos").alias("pos")
-        )
-        updated, hit_paths, touched, masked_rows = self._dv_masked_entries(
-            all_entries, hits
-        )
-        if not touched:  # no live row matched: nothing to commit
-            return {
-                "noop": {"version": cur["version"], "touched_partitions": [],
-                         "files_rewritten": 0, "rows_masked": 0}
-            }
-        return {
-            "operation": "delete+dv",
-            "schema": schema,
-            "touched": touched,
-            "replaced": set(hit_paths),
-            "entries": updated,
-            "stats": {"files_rewritten": 0, "rows_masked": masked_rows},
-        }
-
-    def delete_keys(
-        self,
-        keys: DataFrame,
-        on: str | list[str],
-        use_dv: bool = True,
-        broadcast_threshold: int = 2_000_000,
-        max_retries: int = 0,
-    ) -> dict:
-        """Set-based delete: remove every live row whose key appears in
-        ``keys`` (the GDPR purge-list / CDC tombstone shape — a
-        DataFrame, never a driver-side literal list). Scope follows the
-        merge rules when ``keys`` carries the partition/bucket columns
-        (pruned scan), else the whole live set is consulted. Default is
-        deletion vectors (zero rewrites); ``use_dv=False`` rewrites the
-        scoped files without the masked rows. ``max_retries``: the
-        shared OCC rebase loop (``_occ``)."""
-        pk = [on] if isinstance(on, str) else list(on)
-
+        """Delete rows matching a Column predicate (the GDPR-delete
+        shape): the keyed commit's tail behind a predicate scope (module
+        docstring). Rewrite mode rewrites only the partitions holding a
+        match; ``use_dv=True`` scans the live set once and masks the
+        matching positions. Rows where the predicate evaluates NULL are
+        KEPT (SQL DELETE semantics) in both modes."""
         def compute(cur: dict) -> dict:
             schema = T.StructType.fromJson(cur["schema"])
-            have = set(keys.columns)
-            prunable = (not cur["partition_by"]) or cur["partition_by"] in have
-            pk_rows = None
-            if prunable:
-                touched, old, pk_rows = self._merge_scope(cur, keys, pk)
-            else:
-                touched, old = None, self._m_entries(cur)
-            k = self._key_frame(pk_rows, keys, keys, pk, broadcast_threshold)
-            if use_dv:
-                # scan only the pruned scope; untouched entries carry
-                live = self._read_entries(old, schema, keep_ref=True)
-                hits = live.join(k, pk, "left_semi").select(
-                    F.col("__ref").alias("file_ref"), F.col("__pos").alias("pos")
+            old, touched = self._m_entries(cur), []
+            if cur["partition_by"] and not use_dv:
+                touched = self._touched_tokens(
+                    self._read_entries(old, schema).filter(predicate),
+                    cur["partition_by"],
                 )
-                updated, hit_paths, dv_touched, masked_rows = (
-                    self._dv_masked_entries(old, hits)
-                )
-                if not dv_touched:
-                    return {
-                        "noop": {"version": cur["version"],
-                                 "touched_partitions": [],
-                                 "files_rewritten": 0, "rows_masked": 0}
-                    }
-                return {
-                    "operation": "delete+dv",
-                    "schema": schema,
-                    "touched": dv_touched,
-                    "replaced": set(hit_paths),
-                    "entries": updated,
-                    "stats": {"files_rewritten": 0, "rows_masked": masked_rows,
-                              "files_scanned": len(old)},
-                }
-            scoped = self._read_entries(old, schema)
-            survivors = scoped.join(k, pk, "left_anti")
-            entries = self._write_snapshot(
-                survivors, cur["partition_by"], bucket_by=cur.get("bucket_by")
+                old = self._m_entries(cur, set(touched))
+            return self._mask_or_rewrite(
+                cur, schema, old, touched,
+                lambda df: df.filter(predicate),
+                lambda df: df.filter(~F.coalesce(predicate, F.lit(False))),
+                None, use_dv, "delete",
             )
-            if touched is None:
-                touched_out = (
-                    sorted(
-                        {
-                            e["partition"] if e["partition"] is not None else ""
-                            for e in old
-                        }
-                    )
-                    if old
-                    else []
-                )
-            else:
-                touched_out = touched
-            return {
-                "operation": "delete",
-                "schema": schema,
-                "touched": touched_out,
-                "replaced": {e["path"] for e in old},
-                "entries": entries,
-                "stats": {
-                    "files_rewritten": len(old),
-                    "files_written": len(entries),
-                },
-            }
-
-        return self._occ(compute, max_retries)
-
-    def apply_changes(
-        self,
-        upserts: DataFrame,
-        tombstones: DataFrame | None,
-        on: str | list[str],
-        use_dv: bool = True,
-        broadcast_threshold: int = 2_000_000,
-        max_retries: int = 0,
-    ) -> dict:
-        """Apply a CDC batch — upsert rows AND tombstone keys — as ONE
-        atomic commit (the CDC-replication apply shape). Compared to a
-        merge followed by delete_keys this halves version churn and,
-        more importantly, removes the window where a reader sees the
-        batch's inserts without its deletes: readers observe whole
-        batches or nothing.
-
-        ``tombstones`` holds the key columns, plus optionally the
-        table's partition/bucket columns for a pruned delete scope.
-        Default is deletion vectors: matched and tombstoned rows are
-        masked (zero rewrites), upserts append as new files.
-        ``use_dv=False`` rewrites the scoped files instead.
-        ``max_retries``: the shared OCC rebase loop."""
-        pk = [on] if isinstance(on, str) else list(on)
-        # Emptiness of each side is decided by the SAME probe action
-        # that decides the merge scopes when the layouts allow it
-        # (_paired_scope_probe, optimization r9) — the two isEmpty jobs
-        # and the second probe collect disappear from the commit path.
-        # Fall back to the separate probes otherwise; cache the answer
-        # so OCC retries don't re-pay it.
-        emptiness: dict[str, bool] = {}
-
-        def side_empty(name: str, df: DataFrame) -> bool:
-            if name not in emptiness:
-                emptiness[name] = df.isEmpty()
-            return emptiness[name]
-
-        def compute(cur: dict) -> dict:
-            partition_by = cur["partition_by"]
-            cur_schema = T.StructType.fromJson(cur["schema"])
-            # combined scope: the upserts' touched cells plus the
-            # tombstones' (pruned when they carry the layout columns,
-            # whole live set otherwise) — each file listed once
-            touched: set[str] = set()
-            old: list[dict] = []
-            seen: set[str] = set()
-            full_scope = False
-            # vacuously bounded (empty key set) when a side is absent
-            ups_rows: list | None = []
-            tombs_rows: list | None = []
-            prunable = tombstones is not None and (
-                (not partition_by)
-                or partition_by in set(tombstones.columns)
-            )
-            pair = (
-                self._paired_scope_probe(cur, upserts, tombstones, pk)
-                if prunable
-                else None
-            )
-            if pair is not None:
-                have_ups, have_tombs, scope_u, scope_t = pair
-                t_u, old_u, ups_rows = scope_u
-                t_t, old_t, tombs_rows = scope_t
-                if not have_ups:
-                    t_u, old_u, ups_rows = [], [], []
-                if not have_tombs:
-                    t_t, old_t, tombs_rows = [], [], []
-                touched.update(t_u)
-                touched.update(t_t)
-                for e in old_u + old_t:
-                    if e["path"] not in seen:
-                        seen.add(e["path"])
-                        old.append(e)
-            else:
-                have_tombs = tombstones is not None and not side_empty(
-                    "tombs", tombstones
-                )
-                have_ups = not side_empty("ups", upserts)
-                if have_ups:
-                    t_u, old_u, ups_rows = self._merge_scope(
-                        cur, upserts, pk
-                    )
-                    touched.update(t_u)
-                    for e in old_u:
-                        if e["path"] not in seen:
-                            seen.add(e["path"])
-                            old.append(e)
-                if have_tombs:
-                    tombs_rows = None
-                    if prunable:
-                        t_t, old_t, tombs_rows = self._merge_scope(
-                            cur, tombstones, pk
-                        )
-                        touched.update(t_t)
-                    else:
-                        full_scope = True
-                        old_t = self._m_entries(cur)
-                    for e in old_t:
-                        if e["path"] not in seen:
-                            seen.add(e["path"])
-                            old.append(e)
-            if not have_ups and not have_tombs:
-                return {
-                    "noop": {"version": cur["version"],
-                             "touched_partitions": [],
-                             "files_rewritten": 0, "files_written": 0,
-                             "rows_masked": 0}
-                }
-            schema = _merge_schemas(cur_schema, upserts.schema)
-            if have_ups:
-                self._enforce_constraints(
-                    cur.get("constraints"), upserts, "apply_changes"
-                )
-            # one key frame masks both classes: upserted keys (replaced
-            # by the new rows) and tombstoned keys (just removed); both
-            # sides' scope probes bounded -> provably broadcastable with
-            # zero extra jobs
-            keys_src = upserts.select(*pk)
-            if have_tombs:
-                keys_src = keys_src.unionByName(tombstones.select(*pk))
-            # both sides' probes bounded -> the union's distinct key set
-            # is their driver-side union, deduped here (order-stable)
-            combined = None
-            if ups_rows is not None and tombs_rows is not None:
-                seen_k: set = set()
-                combined = []
-                for tup in ups_rows + tombs_rows:
-                    if tup not in seen_k:
-                        seen_k.add(tup)
-                        combined.append(tup)
-            keys = self._key_frame(
-                combined, keys_src, keys_src, pk, broadcast_threshold
-            )
-            if use_dv:
-                live = self._read_entries(old, cur_schema, keep_ref=True)
-                hits = live.join(keys, pk, "left_semi").select(
-                    F.col("__ref").alias("file_ref"), F.col("__pos").alias("pos")
-                )
-                updated, hit_paths, dv_touched, masked = (
-                    self._dv_masked_entries(old, hits)
-                )
-                new_entries = (
-                    self._write_snapshot(
-                        _align(upserts, schema), partition_by,
-                        bucket_by=cur.get("bucket_by"),
-                    )
-                    if have_ups
-                    else []
-                )
-                if not dv_touched and not new_entries:
-                    return {
-                        "noop": {"version": cur["version"],
-                                 "touched_partitions": [],
-                                 "files_rewritten": 0, "files_written": 0,
-                                 "rows_masked": 0}
-                    }
-                # OCC conflict tokens: every partition whose content
-                # changed — insert landing spots plus dv-hit partitions
-                # (hits outside the prunable scope only exist when the
-                # tombstones were unprunable, covered by dv_touched)
-                occ_touched = sorted(
-                    touched
-                    | set(dv_touched)
-                    | {e["partition"] or "" for e in new_entries}
-                )
-                return {
-                    "operation": "apply-changes+dv",
-                    "schema": schema,
-                    "touched": occ_touched,
-                    "replaced": set(hit_paths),
-                    "entries": updated + new_entries,
-                    "stats": {
-                        "files_rewritten": 0,
-                        "files_written": len(new_entries),
-                        "files_scanned": len(old),
-                        "rows_masked": masked,
-                    },
-                }
-            scoped = self._read_entries(old, cur_schema)
-            survivors = _align(scoped, schema).join(keys, pk, "left_anti")
-            out = (
-                survivors.unionByName(_align(upserts, schema))
-                if have_ups
-                else survivors
-            )
-            entries = self._write_snapshot(
-                out, partition_by, bucket_by=cur.get("bucket_by")
-            )
-            occ_touched = sorted(
-                (
-                    {e["partition"] or "" for e in old}
-                    | {e["partition"] or "" for e in entries}
-                )
-                if full_scope
-                else touched | {e["partition"] or "" for e in entries}
-            )
-            return {
-                "operation": "apply-changes",
-                "schema": schema,
-                "touched": occ_touched,
-                "replaced": {e["path"] for e in old},
-                "entries": entries,
-                "stats": {
-                    "files_rewritten": len(old),
-                    "files_written": len(entries),
-                },
-            }
 
         return self._occ(compute, max_retries)
 
@@ -2617,9 +2369,10 @@ class ManifestTable:
         - Target rows with no source match always carry (standard
           NOT-MATCHED-BY-SOURCE default).
 
-        Scope and commit mechanics are merge()'s: only the source keys'
-        partitions/cells rewrite, untouched files carry by segment
-        reference, OCC with path-based rebase. Source must be key-
+        Scope is the keyed commit's probe (module docstring): only the
+        source keys' partitions/cells rewrite, untouched files carry by
+        segment reference, OCC with path-based rebase, an empty source
+        commits nothing. Source must be key-
         unique (the merge contract). Rewrite mode only — a dv variant
         would mask matched rows and append, but conditional updates
         need the joined row anyway, so the rewrite IS the work."""
@@ -2633,7 +2386,9 @@ class ManifestTable:
             self._enforce_constraints(
                 cur.get("constraints"), source, "merge_into"
             )
-            touched, old, _kb = self._merge_scope(cur, source, pk)
+            nonempty, touched, old, _rows = self._probe_sides(cur, [source], pk)[0]
+            if not nonempty:
+                return self._noop(cur)
             cur_schema = T.StructType.fromJson(cur["schema"])
             t = _align(self._read_entries(old, cur_schema), schema).withColumn(
                 "__t", F.lit(True)

@@ -571,23 +571,23 @@ def manifest_cdc_sync(src, dst, on: str, since_version: int | None = None,
     if since_version == head:
         return {"from_version": head, "to_version": head, "mode": "noop"}
     # materialize the O(delta) feed once: apply_changes drives several
-    # actions over these frames (emptiness probes, scope collects, the
-    # mask join) and each would otherwise recompute the changes() diff
+    # actions over these frames (the scope probe, the mask join, the
+    # upsert write) and each would otherwise recompute the changes() diff
     feed = src.changes(since_version, head).localCheckpoint(eager=True)
     inserts = feed.filter(FF.col("_change_type") == "insert").drop("_change_type")
     deletes = feed.filter(FF.col("_change_type") == "delete").drop("_change_type")
     # pure-delete tombstones: keys with a delete event and no insert
     # event (an update's delete+insert pair collapses into the upsert).
-    # Lazy checkpoint: apply_changes touches this frame from four
-    # actions (emptiness probe, scope probe, key union, mask join) and
-    # each would otherwise replay the anti-join (optimization r8,
+    # Lazy checkpoint: apply_changes' scope probe reads this frame, and
+    # so does its key frame when the probe overflows its bound; each
+    # read would otherwise replay the anti-join (optimization r8,
     # guide §1.2 — still O(delta): the inputs are the checkpointed feed)
     tombstones = deletes.join(
         inserts.select(on).distinct(), on, "left_anti"
     ).localCheckpoint(eager=False)
     # keep the destination's partition/bucket columns on the tombstone
-    # frame so apply_changes reuses _merge_scope pruning — the tombstone
-    # scope stays O(touched cells), not a whole-live-set scan
+    # frame so apply_changes' scope probe prunes that side too — the
+    # tombstone scope stays O(touched cells), not a whole-live-set scan
     dman = dst._raw()
     layout_cols = [
         c

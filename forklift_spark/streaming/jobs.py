@@ -370,12 +370,12 @@ def stream_merge_manifest(
     never corruption."""
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if not table.exists():
-            table.create(batch_df, partition_by=partition_by)
-        else:
+        # an empty micro-batch is merge's own noop (its scope probe
+        # decides emptiness); only the first batch's create needs a guard
+        if table.exists():
             table.merge(batch_df, on=on, use_dv=use_dv, max_retries=max_retries)
+        elif not batch_df.isEmpty():
+            table.create(batch_df, partition_by=partition_by)
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:

@@ -14,7 +14,9 @@ A narrow batch (fixed small key range) additionally shows cell-level
 rewrite pruning on the bucketed table.
 
 Usage: python scripts/scale_manifest.py [sf_dir ...]
-Prints one JSON line; intended for SCALING.md appendix evidence.
+Each ``sf_dir`` must hold ``orders.parquet``; a missing input exits
+before Spark starts. Prints one JSON line; intended for SCALING.md
+appendix evidence.
 """
 
 from __future__ import annotations
@@ -287,6 +289,13 @@ def run(spark, sf_dir: str) -> dict:
 
 def main() -> None:
     dirs = sys.argv[1:] or ["/root/testdata/sf0.1", ".scale/sf1"]
+    # fail before the JVM starts, not after the first scale factor's run
+    missing = [
+        os.path.join(d, "orders.parquet") for d in dirs
+        if not os.path.exists(os.path.join(d, "orders.parquet"))
+    ]
+    if missing:
+        sys.exit(f"scale_manifest: missing input {', '.join(missing)}")
     spark = get_spark(app_name="scale_manifest")
     print(json.dumps({"runs": [run(spark, d) for d in dirs]}))
 
