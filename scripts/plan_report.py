@@ -35,6 +35,9 @@ def main() -> None:
     from forklift_spark.session import get_spark
 
     spark = get_spark(app_name="plan_report")
+    # exchange counts depend on it: operators that partition by the core
+    # count add shuffles Spark elides at local[1]
+    parallelism = spark.sparkContext.defaultParallelism
     cat = Q.catalog()
     skip = set(_BUILDS_EXECUTE) | {
         n for n in cat if n.startswith(("q_csv", "q_jdbc", "q_dump", "q_es",
@@ -87,13 +90,18 @@ def main() -> None:
             }
         )
     with open(f"plans_report.json", "w") as f:
-        json.dump({"sf_dir": SF_DIR, "rows": rows}, f, indent=1)
+        json.dump(
+            {"sf_dir": SF_DIR, "default_parallelism": parallelism, "rows": rows},
+            f,
+            indent=1,
+        )
     audited = [r for r in rows if "exchanges" in r]
     errors = [r for r in rows if "error" in r]
     with open(f"PLANS_{tag}.md", "w") as f:
         f.write(
             f"# Physical-plan evidence — {tag}\n\n"
-            f"{len(audited)} catalog queries audited at {SF_DIR} "
+            f"{len(audited)} catalog queries audited at {SF_DIR}, "
+            f"defaultParallelism {parallelism} "
             f"({len(rows) - len(audited) - len(errors)} side-effect/streaming "
             "entries covered by their own tests instead; "
             f"{len(errors)} ERRORED — must be 0).\n\n"

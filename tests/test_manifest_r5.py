@@ -26,7 +26,10 @@ from forklift_spark.manifest import ManifestTable
 
 @pytest.fixture()
 def base_df(spark):
-    # 3 partitions (y=1,2,3), 10 keys each
+    # 3 partitions (y=1,2,3), 10 keys each. Files per partition follow
+    # spark.range's slice count (defaultParallelism): each slice writes
+    # one file per y value it holds. Tests read the layout from the
+    # manifest and assume no file count.
     return spark.range(30).select(
         F.col("id").alias("k"),
         (F.col("id") % 3 + 1).cast("int").alias("y"),
@@ -125,17 +128,28 @@ def test_commit_carries_untouched_segments_by_reference(table, spark):
     t2 = ManifestTable(spark, table.root, table.table)
     t2.segment_target = 1  # force one segment per entry
     t2.checkpoint()  # v2: repack v1's entries at the small target
-    segs_v2 = {s["path"] for s in t2._raw()["segments"]}
+    v2 = t2._raw()["segments"]
+    segs_v2 = {s["path"] for s in v2}
     assert len(segs_v2) > 1
+    paths_v2 = {e["path"] for e in t2.manifest()["entries"]}
     t2.merge(
         spark.createDataFrame([(1, 2, 999)], "k long, y int, v long"), on="k"
     )
     segs_v3 = {s["path"] for s in t2._raw()["segments"]}
     assert segs_v2 & segs_v3, "no segment carried by reference"
-    # carried segments cover partitions the merge didn't touch
-    for s in t2._raw()["segments"]:
-        if s["path"] in segs_v2:
-            assert "2" not in s["partitions"]
+    # carried segments are exactly the base segments holding no replaced
+    # file (_assemble_segments); with one entry per segment, a y=2
+    # segment whose file the key zone-map cut left alone carries too.
+    # At one file per partition no carried segment covers y=2.
+    replaced = paths_v2 - {e["path"] for e in t2.manifest()["entries"]}
+    assert replaced, "the merge replaced no file"
+    assert segs_v2 & segs_v3 == {
+        s["path"]
+        for s in v2
+        if not any(e["path"] in replaced for e in t2._load_segment(s["path"]))
+    }
+    # every segment of a partition the merge didn't touch is carried
+    assert {s["path"] for s in v2 if "2" not in s["partitions"]} <= segs_v3
     # and the logical content is exactly the post-merge state
     rows = {r.k: r.v for r in t2.read().collect()}
     assert rows[1] == 999 and len(rows) == 30
