@@ -106,6 +106,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from forklift_spark import zonemap
 from forklift_spark.changelog import position_changelog
 from forklift_spark.connections.base import Connection
 from forklift_spark.connections.publish import (
@@ -693,47 +694,15 @@ class DeltaLiteTable:
                 "(earliest retained commit is newer)")
         return max(cands)
 
-    # logical types whose [min, max] interval pruning is well-defined:
-    # numeric (compared via float, the manifest reader's convention),
-    # plus strings and dates (lexicographic — Delta's truncated string
-    # bounds stay conservative: stored min <= true min, stored max >=
-    # true max). Timestamp stats are ISO-T strings: pass ISO-T string
-    # bounds to prune on them.
-    _PRUNE_NUMERIC = (T.ByteType, T.ShortType, T.IntegerType,
-                      T.LongType, T.FloatType, T.DoubleType,
-                      T.DecimalType)
-    _PRUNE_LEX = (T.StringType, T.DateType, T.TimestampType,
-                  T.TimestampNTZType)
-
-    @staticmethod
-    def _range_match(fmin, fmax, lo, hi, numeric: bool) -> bool:
-        """Can a file whose column spans [fmin, fmax] hold a row in
-        [lo, hi]? (None bound = unbounded.)"""
-        if numeric:
-            fmin = float(fmin)
-            fmax = float(fmax)
-            lo = float(lo) if lo is not None else None
-            hi = float(hi) if hi is not None else None
-        else:
-            fmin = str(fmin)
-            fmax = str(fmax)
-            lo = str(lo) if lo is not None else None
-            hi = str(hi) if hi is not None else None
-        if lo is not None and fmax < lo:
-            return False
-        if hi is not None and fmin > hi:
-            return False
-        return True
-
     def _prune_files(self, snap: dict, where: dict) -> dict:
-        """File skipping from the log's own metadata — partition values
-        for partition columns, ``add.stats`` minValues/maxValues (and
-        the all-NULL nullCount==numRecords case) for data columns — the
-        same plan-time discipline as the manifest reader's zone maps.
-        Files without usable stats always survive (stats are an
-        optimization, never a correctness dependency; the caller's
-        residual row filter keeps results exact). Returns the surviving
-        entries; planning counters land on ``self.last_read_stats``."""
+        """File skipping by the rule in ``forklift_spark/zonemap.py``,
+        from the log's own metadata: a partition value ``v`` is the stat
+        ``(v, v)`` (NULL: all-NULL); a data column's stat comes from
+        ``add.stats`` minValues/maxValues by physical name, with
+        ``nullCount == numRecords`` as all-NULL and a timestamp max
+        widened by 1 ms (spec writers truncate timestamp stats to
+        milliseconds). Returns the surviving files; planning counters
+        land on ``self.last_read_stats``."""
         schema: T.StructType = snap["schema"]
         pcols = set(snap["partition_columns"])
         cm = snap.get("cm_mode", "none")
@@ -743,94 +712,46 @@ class DeltaLiteTable:
                      if cm != "none" else f.name)
             for f in schema.fields
         }
-        unknown = [c for c in where if c not in types]
-        if unknown:
-            raise ValueError(
-                f"where columns {unknown} not in the table schema "
-                f"({sorted(types)})")
+        checks = zonemap.checks(where, types)
 
-        checks = []  # (col, phys_key, lo, hi, numeric, is_pcol)
-        for col, (lo, hi) in where.items():
-            if lo is None and hi is None:
-                continue
-            dt = types[col]
-            if isinstance(dt, self._PRUNE_NUMERIC):
-                numeric = True
-            elif isinstance(dt, self._PRUNE_LEX):
-                numeric = False
-            else:
-                continue  # unprunable type: residual filter only
-            checks.append((col, phys[col], lo, hi, numeric,
-                           col in pcols))
-
-        kept: dict[str, dict] = {}
-        for path, e in snap["files"].items():
-            stats = None
-            raw = e.get("stats")
-            if raw:
+        def stat(e: dict, col: str):
+            pk = phys[col]
+            if col in pcols:
+                pv = e.get("pv") or {}
+                v = pv.get(pk, pv.get(col))
+                if v == "" and not isinstance(types[col], T.StringType):
+                    v = None
+                return zonemap.ALL_NULL if v is None else (v, v)
+            st = e.get("stats") or {}
+            try:
+                st = (json.loads(st) if isinstance(st, str) else st) or {}
+            except ValueError:
+                st = {}
+            minv = (st.get("minValues") or {}).get(pk)
+            maxv = (st.get("maxValues") or {}).get(pk)
+            if minv is None or maxv is None:
+                nulls = (st.get("nullCount") or {}).get(pk)
+                nrec = st.get("numRecords")
+                if nulls is not None and nulls == nrec:
+                    return zonemap.ALL_NULL
+                return None
+            if isinstance(types[col], (T.TimestampType, T.TimestampNTZType)):
                 try:
-                    stats = json.loads(raw) if isinstance(raw, str) \
-                        else raw
-                except (ValueError, TypeError):
-                    stats = None
-            keep = True
-            for col, pk, lo, hi, numeric, is_pcol in checks:
-                if is_pcol:
-                    pv = e.get("pv") or {}
-                    v = pv.get(pk, pv.get(col))
-                    if v == "" and not isinstance(types[col],
-                                                  T.StringType):
-                        v = None
-                    if v is None or not self._range_match(
-                            v, v, lo, hi, numeric):
-                        keep = False  # NULL never satisfies a bound
-                        break
-                    continue
-                if not stats:
-                    continue
-                minv = (stats.get("minValues") or {}).get(pk)
-                maxv = (stats.get("maxValues") or {}).get(pk)
-                if minv is None or maxv is None:
-                    nulls = (stats.get("nullCount") or {}).get(pk)
-                    nrec = stats.get("numRecords")
-                    if nulls is not None and nrec is not None \
-                            and nulls == nrec:
-                        keep = False  # all-NULL column
-                        break
-                    continue  # no usable bound: keep
-                if not self._range_match(minv, maxv, lo, hi, numeric):
-                    keep = False
-                    break
-            if keep:
-                kept[path] = e
+                    maxv = zonemap.key_of(types[col])(maxv) + zonemap.MS
+                except (TypeError, ValueError, OverflowError):
+                    pass  # unparseable: the keep test keeps the file
+            return (minv, maxv)
 
-        stat_less = {}
-        for col, pk, _lo, _hi, _num, is_pcol in checks:
-            if is_pcol:
-                continue
-            miss = sum(
-                1 for e in kept.values()
-                if not e.get("stats")
-                or pk not in (json.loads(e["stats"])
-                              .get("minValues") or {})
-            )
-            stat_less[col] = miss
-            if miss == len(kept) and miss > 1:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "%s: stats pruning on %r degraded to full scan — "
-                    "none of the %d planned files carry minValues for "
-                    "it (writer collected no stats?)",
-                    self.path, col, miss,
-                )
-        self.last_read_stats = {
-            "files_total": len(snap["files"]),
-            "files_planned": len(kept),
-            "bytes_planned": sum(
-                e.get("size") or 0 for e in kept.values()),
-            "stat_less": stat_less,
+        kept = {
+            p: e for p, e in snap["files"].items()
+            if all(zonemap.keeps(stat(e, c), lo, hi, key)
+                   for c, key, lo, hi in checks)
         }
+        self.last_read_stats = zonemap.read_stats(
+            self.path, len(snap["files"]), list(kept.values()),
+            [c for c, *_ in checks if c not in pcols], stat,
+            lambda e: e.get("size"),
+        )
         return kept
 
     def read(self, version: int | None = None,
@@ -838,37 +759,23 @@ class DeltaLiteTable:
              where: dict | None = None) -> DataFrame:
         """Snapshot read. With ``where = {col: (lo, hi)}`` (None =
         unbounded), files are SKIPPED at plan time from the Delta log's
-        own metadata — partition values and ``add.stats`` bounds — and
-        the row-level interval filter is applied on top, so results are
-        exact whether or not a file carries stats (the manifest
-        reader's contract, mirrored; counters on
-        ``self.last_read_stats``)."""
+        own metadata (``_prune_files``) and the row-level interval
+        filter is applied on top, so results are exact whether or not a
+        file carries stats (counters on ``self.last_read_stats``)."""
         if as_of_ms is not None:
             if version is not None:
                 raise ValueError("pass version OR as_of_ms, not both")
             version = self.version_as_of(int(as_of_ms))
         snap = self.snapshot(version)
         if where:
-            snap = dict(snap)
-            snap["files"] = self._prune_files(snap, where)
-            if not snap["files"]:
-                df = self.spark.createDataFrame([], snap["schema"])
-            else:
-                df = self._scan(snap)
-            for col, (lo, hi) in where.items():
-                if lo is not None:
-                    df = df.filter(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(col) <= F.lit(hi))
-            return df
+            snap = {**snap, "files": self._prune_files(snap, where)}
         if not snap["files"]:
             return self.spark.createDataFrame([], snap["schema"])
         # one scan per distinct partition-value combination; the lit
         # columns are constant-folded, the union is lazy (spec:
         # partition values serialize as strings; empty string means
         # NULL for non-string types — handled in _scan)
-        return self._scan(snap)
-
+        return zonemap.filter_where(self._scan(snap), where)
 
     def changes(self, from_version: int, to_version: int | None = None
                 ) -> DataFrame:

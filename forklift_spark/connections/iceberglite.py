@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from forklift_spark import zonemap
 from forklift_spark.changelog import position_changelog
 from forklift_spark.connections.base import Connection
 from forklift_spark.connections.publish import (
@@ -222,6 +223,26 @@ def encode_bound(ice_type, v) -> bytes | None:
         n = max(1, (unscaled.bit_length() + 8) // 8)
         return unscaled.to_bytes(n, "big", signed=True)
     return None
+
+
+def _zone_value(ice_type, v):
+    """A decoded bound in the zone-map key domain
+    (``forklift_spark/zonemap.py``): days -> date, micros -> datetime."""
+    import datetime as _dt
+
+    try:
+        if v is not None and ice_type == "date":
+            return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
+        if v is not None and ice_type in ("timestamp", "timestamptz"):
+            return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=v)
+    except OverflowError:
+        return None
+    return v
+
+
+def _same(v):
+    """Zone-map key of values already in the transform's domain."""
+    return v
 
 
 def _bound_probe(ice_type, v):
@@ -758,90 +779,62 @@ class IcebergLiteTable:
             out = out.unionByName(p)
         return out
 
-    def _prune_data_files(self, inv: dict, where: dict) -> None:
-        """File skipping from the manifests' per-column value bounds
-        (spec fields 125/128, single-value-serialized by field id) and
-        the all-NULL ``null_value_counts == record_count`` case — the
-        same plan-time discipline as the manifest reader's zone maps
-        and the Delta reader's ``add.stats`` pruning. Files without
-        usable bounds always survive (bounds are an optimization, never
-        a correctness dependency); planning counters land on
-        ``self.last_read_stats``. Prunes ``inv["data"]`` in place
+    def _prune_data_files(self, inv: dict, where: dict) -> list:
+        """File skipping by the rule in ``forklift_spark/zonemap.py``,
+        from the manifests' per-column value bounds (spec fields
+        125/128, single-value-serialized by field id; all-NULL when
+        ``null_value_counts == record_count``) after the hidden-partition
+        transforms (``_part_keeps``). Returns the surviving data files
         (delete files are untouched: a pruned data file's position
-        deletes simply never match)."""
+        deletes simply never match); planning counters land on
+        ``self.last_read_stats``."""
         fields = {f["name"]: f for f in inv["schema_json"]["fields"]}
-        unknown = [c for c in where if c not in fields]
-        if unknown:
-            raise ValueError(
-                f"where columns {unknown} not in the table schema "
-                f"({sorted(fields)})")
-        checks = []  # (col, field_id, ice_type, lo/hi raw, lo/hi probe)
-        for col, (lo, hi) in where.items():
-            if lo is None and hi is None:
-                continue
-            f = fields[col]
-            t = f["type"]
-            lo_p = _bound_probe(t, lo)
-            hi_p = _bound_probe(t, hi)
-            if (lo is not None and lo_p is None) or \
-                    (hi is not None and hi_p is None):
-                continue  # unprunable type: residual filter only
-            checks.append((col, int(f["id"]), t, lo, hi, lo_p, hi_p))
+        checks = []  # (col, key, lo, hi, field_id, ice_type, probes)
+        for col, key, lo, hi in zonemap.checks(
+                where, {f.name: f.dataType for f in inv["schema"].fields}):
+            t = fields[col]["type"]
+            try:
+                probes = (_bound_probe(t, lo), _bound_probe(t, hi))
+            except (TypeError, ValueError, OverflowError):
+                probes = None
+            if probes and ((lo is not None and probes[0] is None)
+                           or (hi is not None and probes[1] is None)):
+                probes = None  # transforms cannot map this bound
+            checks.append((col, key, lo, hi, int(fields[col]["id"]), t,
+                           probes))
+        ids = {c[0]: (c[4], c[5]) for c in checks}
 
-        total = len(inv["data"])
+        def stat(rec: dict, col: str):
+            fid, t = ids[col]
+            lo = _zone_value(t, decode_bound(t, rec["lower_bounds"].get(fid)))
+            hi = _zone_value(t, decode_bound(t, rec["upper_bounds"].get(fid)))
+            if lo is None or hi is None:
+                nulls = rec["null_value_counts"].get(fid)
+                if nulls is not None and nulls == rec.get("record_count"):
+                    return zonemap.ALL_NULL
+                return None
+            return (lo, hi)
+
         part_pruned = 0
-        kept = []
-        for rec in inv["data"]:
-            keep = True
-            for _col, fid, t, lo, hi, lo_p, hi_p in checks:
-                if not self._part_keeps(inv, rec, fid, t, lo, hi,
-                                        lo_p, hi_p):
-                    keep = False
+
+        def keep(rec: dict) -> bool:
+            nonlocal part_pruned
+            for col, key, lo, hi, fid, t, probes in checks:
+                if probes and not self._part_keeps(inv, rec, fid, t, lo, hi,
+                                                   *probes):
                     part_pruned += 1
-                    break
-                fmin = decode_bound(t, rec["lower_bounds"].get(fid))
-                fmax = decode_bound(t, rec["upper_bounds"].get(fid))
-                if fmin is None or fmax is None:
-                    nulls = rec["null_value_counts"].get(fid)
-                    nrec = rec.get("record_count")
-                    if nulls is not None and nrec is not None \
-                            and nulls == nrec:
-                        keep = False  # all-NULL column
-                        break
-                    continue  # no usable bound: keep
-                if isinstance(fmin, (int, float)) and not isinstance(
-                        fmin, bool) and isinstance(lo_p, float):
-                    fmin, fmax = float(fmin), float(fmax)
-                if lo_p is not None and fmax < lo_p:
-                    keep = False
-                    break
-                if hi_p is not None and fmin > hi_p:
-                    keep = False
-                    break
-            if keep:
-                kept.append(rec)
-        inv["data"] = kept
+                    return False
+                if not zonemap.keeps(stat(rec, col), lo, hi, key):
+                    return False
+            return True
 
-        stat_less = {}
-        for col, fid, _t, _lor, _hir, _lo, _hi in checks:
-            miss = sum(1 for r in kept if fid not in r["lower_bounds"])
-            stat_less[col] = miss
-            if miss == len(kept) and miss > 1:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "%s: bounds pruning on %r degraded to full scan — "
-                    "none of the %d planned files carry lower_bounds "
-                    "for it (writer collected no column stats?)",
-                    self.path, col, miss,
-                )
-        self.last_read_stats = {
-            "files_total": total,
-            "files_planned": len(kept),
-            "bytes_planned": sum(r.get("bytes") or 0 for r in kept),
-            "partition_pruned": part_pruned,
-            "stat_less": stat_less,
-        }
+        kept = [rec for rec in inv["data"] if keep(rec)]
+        st = zonemap.read_stats(self.path, len(inv["data"]), kept, list(ids),
+                                stat, lambda r: r.get("bytes"))
+        st["partition_pruned"] = part_pruned
+        st["stat_less"] = st.pop("stat_less")  # keeps the CLI's key order
+        self.last_read_stats = st
+        return kept
 
     def _part_keeps(self, inv: dict, rec: dict, fid: int, ice_type: str,
                     lo, hi, lo_p, hi_p) -> bool:
@@ -888,19 +881,8 @@ class IcebergLiteTable:
             iv = _transform_interval(tr, ice_type, lo, hi, lo_p, hi_p)
             if iv is None:
                 continue
-            tlo, thi = iv
-            try:
-                pv = pval
-                if isinstance(pv, int) and not isinstance(pv, bool) \
-                        and isinstance(tlo if tlo is not None else thi,
-                                       float):
-                    pv = float(pv)
-                if tlo is not None and pv < tlo:
-                    return False
-                if thi is not None and pv > thi:
-                    return False
-            except TypeError:
-                continue
+            if not zonemap.keeps((pval, pval), *iv, _same):
+                return False
         return True
 
     def read(self, snapshot_id=None, as_of_ms: int | None = None,
@@ -921,18 +903,9 @@ class IcebergLiteTable:
         if as_of_ms is not None:
             snapshot_id = self.snapshot_as_of(int(as_of_ms))
         inv = self.file_inventory(snapshot_id)
-        schema: T.StructType = inv["schema"]
-        cols = [f.name for f in schema.fields]
         if where:
-            self._prune_data_files(inv, where)
-            df = self._read_inventory(inv, resolve)
-            for col, (lo, hi) in where.items():
-                if lo is not None:
-                    df = df.filter(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(col) <= F.lit(hi))
-            return df
-        return self._read_inventory(inv, resolve)
+            inv = {**inv, "data": self._prune_data_files(inv, where)}
+        return zonemap.filter_where(self._read_inventory(inv, resolve), where)
 
     def _read_inventory(self, inv: dict, resolve: str = "name",
                         keep_meta: bool = False) -> DataFrame:

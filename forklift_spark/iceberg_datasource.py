@@ -110,7 +110,7 @@ class _IceBatchReader(_IceScan, _BatchReader):
         _refuse_eq(inv, "iceberglite batch scan")
         where = self._bounds()
         if where:
-            t._prune_data_files(inv, where)  # prunes inv in place
+            inv = {**inv, "data": t._prune_data_files(inv, where)}
         masks = _pos_masks(t, inv)
         self._resolve_ids(inv)
         return self._finish([

@@ -105,6 +105,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from forklift_spark import zonemap
 from forklift_spark.changelog import replicate_net
 
 PART_DIR_COL = "__fsp__"  # file-system-partition dup column (never in data)
@@ -349,6 +350,13 @@ class ManifestTable:
         with open(p) as fh:
             return json.load(fh)
 
+    @staticmethod
+    def _n_files(m: dict) -> int:
+        """Live file count of a raw manifest, from its segment records."""
+        if "entries" in m:
+            return len(m["entries"])
+        return sum(s["n_files"] for s in m["segments"])
+
     def manifest(self, version: int | None = None) -> dict:
         """Back-compat accessor: the manifest dict with ``entries``
         MATERIALIZED (all segments loaded — O(table metadata); use
@@ -534,33 +542,18 @@ class ManifestTable:
         return out
 
     @staticmethod
-    def _seg_where_match(seg: dict, col: str, bound, numeric: bool) -> bool:
-        """Can any file in this segment hold a row with ``col`` in the
-        bound? Segments without a summary for the column always match
-        (summaries are an optimization, never a correctness gate); a
-        kind mismatch between the stored aggregation and the read-side
-        comparison disables pruning rather than risking it."""
+    def _seg_where_match(seg: dict, col: str, bound, key) -> bool:
+        """Zone-map test (``zonemap.keeps``) of a SEGMENT summary. Kind
+        guard: a numeric key prunes only a numerically aggregated
+        summary (``k == "n"``), any other key only a lexicographic one;
+        a mismatch, like a missing summary, keeps the segment."""
         st = seg.get("stats", {}).get(col)
-        if st is None:
+        if st is None or (
+            not st.get("null") and (st["k"] == "n") != (key is float)
+        ):
             return True
-        if st.get("null"):
-            return False
-        if (st.get("k") == "n") != bool(numeric):
-            return True
-        lo_b, hi_b = bound
-        slo, shi = st["lo"], st["hi"]
-        if numeric:
-            slo, shi = float(slo), float(shi)
-            lo_b = float(lo_b) if lo_b is not None else None
-            hi_b = float(hi_b) if hi_b is not None else None
-        else:
-            lo_b = str(lo_b) if lo_b is not None else None
-            hi_b = str(hi_b) if hi_b is not None else None
-        if lo_b is not None and shi < lo_b:
-            return False
-        if hi_b is not None and slo > hi_b:
-            return False
-        return True
+        stat = zonemap.ALL_NULL if st.get("null") else (st["lo"], st["hi"])
+        return zonemap.keeps(stat, *bound, key)
 
     def _load_segment(self, rel: str) -> list[dict]:
         if rel in self._seg_cache:
@@ -610,44 +603,38 @@ class ManifestTable:
         ]
 
     @staticmethod
-    def _seg_intersects(seg: dict, want: set) -> bool:
-        return any(
-            (p if p is not None else NULL_TOKEN) in want
-            for p in seg["partitions"]
-        )
+    def _want(partitions: list | None) -> set | None:
+        """A partition-value list as directory tokens (NULL_TOKEN for a
+        null value); None = every partition."""
+        if partitions is None:
+            return None
+        return {NULL_TOKEN if p is None else str(p) for p in partitions}
+
+    @staticmethod
+    def _seg_wanted(seg: dict, want: set | None, seg_ok=None) -> bool:
+        """The segment predicate of ``_m_entries``: the segment covers a
+        wanted partition and passes ``seg_ok`` (segment zone maps)."""
+        return (
+            want is None
+            or any((p if p is not None else NULL_TOKEN) in want
+                   for p in seg["partitions"])
+        ) and (seg_ok is None or seg_ok(seg))
 
     def _m_entries(
-        self,
-        m: dict,
-        partitions: set | None = None,
-        where: dict | None = None,
-        types: dict | None = None,
+        self, m: dict, partitions: set | None = None, seg_ok=None
     ) -> list[dict]:
         """Entry list of a raw manifest. With ``partitions`` (a set of
-        string tokens, NULL_TOKEN for a null partition value), only
-        segments covering a wanted partition are parsed; with ``where``
-        (+ ``types`` for numeric-vs-string comparison), segments whose
-        SEGMENT-level zone maps can't intersect are skipped too — read
-        planning is O(pruned metadata), the point of the segment
-        layout. Callers still apply per-file pruning afterwards."""
+        string tokens, ``_want``), only segments covering a wanted
+        partition are parsed; with ``seg_ok``, only segments it passes
+        too — read planning is O(pruned metadata), the point of the
+        segment layout. Callers still apply per-file pruning."""
         if "entries" in m:  # legacy inline manifest (pre-segment format)
             es = m["entries"]
         else:
             es = []
             for seg in m["segments"]:
-                if partitions is not None and not self._seg_intersects(
-                    seg, partitions
-                ):
-                    continue
-                if where and not all(
-                    self._seg_where_match(
-                        seg, col, bound,
-                        self._numeric((types or {}).get(col, T.StringType())),
-                    )
-                    for col, bound in where.items()
-                ):
-                    continue
-                es.extend(self._load_segment(seg["path"]))
+                if self._seg_wanted(seg, partitions, seg_ok):
+                    es.extend(self._load_segment(seg["path"]))
         if partitions is not None:
             es = [
                 e
@@ -945,89 +932,87 @@ class ManifestTable:
         return entries
 
     @staticmethod
-    def _numeric(dtype: T.DataType) -> bool:
-        return isinstance(
-            dtype,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.FloatType, T.DoubleType, T.DecimalType),
-        )
+    def _file_stat(entry: dict, col: str):
+        """A file's zone-map stat for ``col`` (``zonemap.keeps``):
+        None without stats, ALL_NULL for a recorded [None, None]."""
+        st = entry.get("stats", {}).get(col)
+        return None if st is None else zonemap.ALL_NULL if st[0] is None else st
 
-    def _file_matches(self, entry: dict, col: str, bound, numeric: bool) -> bool:
-        """Can this file hold a row with ``col`` in [lo, hi]? Files
-        without stats always match (stats are an optimization, never a
-        correctness dependency)."""
-        stats = entry.get("stats", {}).get(col)
-        if stats is None:
-            return True
-        fmin, fmax = stats
-        if fmin is None:  # all-NULL column: no row satisfies a range
-            return False
-        lo, hi = bound
-        if numeric:
-            fmin, fmax = float(fmin), float(fmax)
-            lo = float(lo) if lo is not None else None
-            hi = float(hi) if hi is not None else None
-        else:
-            lo = str(lo) if lo is not None else None
-            hi = str(hi) if hi is not None else None
-        if lo is not None and fmax < lo:
-            return False
-        if hi is not None and fmin > hi:
-            return False
-        return True
+    def _file_matches(self, entry: dict, col: str, bound, key) -> bool:
+        """Can this file hold a row with ``col`` in ``bound``?"""
+        return zonemap.keeps(self._file_stat(entry, col), *bound, key)
 
     def _entries(
         self,
         version: int | None = None,
         partitions: list | None = None,
         where: dict | None = None,
+        layers: dict | None = None,
     ) -> list[dict]:
+        """The one read plan of a version, shared by ``read``,
+        ``files``, ``scan_plan`` and ``explain_read``: the ordered layers
+        partitions -> zone maps (``forklift_spark/zonemap.py``) ->
+        bucket cell -> bloom. Segments whose SEGMENT zone maps miss the
+        ``where`` are never parsed. With ``layers``, every wanted
+        partition's segment is parsed instead and each layer's file
+        count recorded there; a missed segment's files all miss at the
+        file level too, so the planned files are the same."""
         m = self._raw(version)
-        want = (
-            {NULL_TOKEN if p is None else str(p) for p in partitions}
-            if partitions is not None
-            else None
-        )
-        types = (
-            {f.name: f.dataType for f in T.StructType.fromJson(m["schema"]).fields}
-            if where
-            else None
-        )
-        entries = self._m_entries(m, want, where=where, types=types)
-        if where:
-            for col, bound in where.items():
-                numeric = self._numeric(types.get(col, T.StringType()))
-                entries = [
-                    e for e in entries if self._file_matches(e, col, bound, numeric)
-                ]
-            # bucket pruning for point lookups: an equality bound on the
-            # bucket column hashes to exactly one cell per partition
-            bb = m.get("bucket_by")
-            if bb and bb[0] in where:
-                lo, hi = where[bb[0]]
-                if lo is not None and lo == hi:
-                    want_b = self._bucket_of_value(bb, lo, types.get(bb[0]))
-                    entries = [
-                        e for e in entries
-                        if e.get("bucket") is None or e["bucket"] == want_b
-                    ]
-            # bloom pruning: equality on a bloom column keeps only files
-            # whose filter has ALL k probe bits set (no false negatives —
-            # probe and build use the same seeded murmur3)
-            bl = m.get("bloom")
-            for col in (bl or {}).get("cols", []):
-                if col not in where:
-                    continue
-                lo, hi = where[col]
-                if lo is None or lo != hi:
-                    continue
-                probe = self._bloom_positions(
-                    lo, types.get(col), bl["bits"], bl["k"]
+        want = self._want(partitions)
+        where = where or {}
+        types = {
+            f.name: f.dataType for f in T.StructType.fromJson(m["schema"]).fields
+        }
+        checks = zonemap.checks(where, types, strict=False)
+
+        def seg_ok(seg: dict) -> bool:
+            return all(
+                self._seg_where_match(seg, c, (lo, hi), key)
+                for c, key, lo, hi in checks
+            )
+
+        entries = self._m_entries(m, want, seg_ok if layers is None else None)
+        if layers is not None:
+            layers["after_partitions"] = len(entries)
+            if "entries" not in m:
+                layers["segments_total"] = len(m["segments"])
+                layers["segments_parsed"] = sum(
+                    self._seg_wanted(seg, want, seg_ok) for seg in m["segments"]
                 )
-                entries = [
-                    e for e in entries
-                    if self._bloom_maybe_contains(e, col, probe)
-                ]
+
+        def point(col: str):  # the value of an equality bound, else None
+            lo, hi = where.get(col, (None, None))
+            return lo if lo is not None and lo == hi else None
+
+        # bucket pruning: an equality bound on the bucket column hashes
+        # to exactly one cell per partition
+        bb = m.get("bucket_by")
+        cell = (
+            self._bucket_of_value(bb, point(bb[0]), types.get(bb[0]))
+            if bb and point(bb[0]) is not None else None
+        )
+        # bloom pruning: equality on a bloom column keeps only files
+        # whose filter has ALL k probe bits set
+        bl = m.get("bloom") or {}
+        probes = [
+            (c, [self._bloom_positions(
+                point(c), types.get(c), bl["bits"], bl["k"])])
+            for c in bl.get("cols", [])
+            if point(c) is not None
+        ]
+        for name, keep in (
+            ("after_zone_maps", checks and (lambda e: all(
+                self._file_matches(e, c, (lo, hi), key)
+                for c, key, lo, hi in checks))),
+            ("after_bucket", cell is not None and (
+                lambda e: e.get("bucket") is None or e["bucket"] == cell)),
+            ("after_bloom", probes and (
+                lambda e: self._bloom_scope_survives(e, probes))),
+        ):
+            if keep:
+                entries = [e for e in entries if keep(e)]
+            if layers is not None:
+                layers[name] = len(entries)
         return entries
 
     def _bloom_positions(self, value, dtype, m: int, k: int) -> list[int]:
@@ -1043,16 +1028,6 @@ class ManifestTable:
             ]
         ).collect()[0]
         return [row[f"p{i}"] for i in range(int(k))]
-
-    @staticmethod
-    def _bloom_maybe_contains(entry: dict, col: str, probe: list[int]) -> bool:
-        """False only when the file's bloom PROVES the value absent;
-        files without a bloom (pre-config snapshots) always match."""
-        hx = entry.get("bloom", {}).get(col)
-        if hx is None:
-            return True
-        bits = bytes.fromhex(hx)
-        return all(bits[p // 8] & (1 << (p % 8)) for p in probe)
 
     @staticmethod
     def _bloom_probe_exact(src_t, tbl_t) -> bool:
@@ -1078,8 +1053,9 @@ class ManifestTable:
 
     @staticmethod
     def _bloom_scope_survives(entry: dict, bloom_checks: list) -> bool:
-        """Merge-scope bloom test: drop the file only when, for some key
-        column with a recorded bloom, NO batch key's probe tuple is
+        """Bloom test of the read plan and the merge scope: drop the
+        file only when, for some column with a recorded bloom, NO probe
+        tuple (one per batch key; one for a read's equality bound) is
         fully set (no false negatives — probe and build share the exact
         seeded-murmur3 expression). Bloom-less entries always stay."""
         blm = entry.get("bloom") or {}
@@ -1102,85 +1078,19 @@ class ManifestTable:
         where: dict | None = None,
     ) -> dict:
         """EXPLAIN for the table format: how many files each pruning
-        layer (partition list -> zone maps -> bucket cell -> bloom)
-        would plan for this read, from manifest metadata alone — no file
-        opened, no job run. The observability hook for "why is this
-        query scanning so much": compare ``layers`` to spot the missing
-        filter/bloom/bucket."""
+        layer (partition list -> zone maps -> bucket cell -> bloom) of
+        the read plan (``_entries``) keeps, and how many metadata
+        segments the same read parses (``segments_parsed``), from
+        manifest metadata alone — no file opened, no job run. The
+        observability hook for "why is this query scanning so much":
+        compare ``layers`` to spot the missing filter/bloom/bucket."""
+        return self._explain(version, partitions, where)[0]
+
+    def _explain(self, version, partitions, where) -> tuple[dict, list, dict]:
+        """(scan_plan, planned entries, raw manifest) of one pass."""
         m = self._raw(version)
-        if "entries" in m:
-            total = len(m["entries"])
-        else:
-            total = sum(s["n_files"] for s in m["segments"])
-        layers = {"total": total}
-        want = (
-            {NULL_TOKEN if p is None else str(p) for p in partitions}
-            if partitions is not None
-            else None
-        )
-        entries = self._m_entries(m, want)
-        layers["after_partitions"] = len(entries)
-        # metadata-plan observability (r5): how many SEGMENT files the
-        # equivalent files()/read() call would parse, after partition
-        # coverage + segment-level zone maps — the "how much metadata
-        # does this read even open" companion to the file layers below
-        if "segments" in m and "entries" not in m:
-            types_m = {
-                f.name: f.dataType
-                for f in T.StructType.fromJson(m["schema"]).fields
-            }
-            parsed = 0
-            for seg in m["segments"]:
-                if want is not None and not self._seg_intersects(seg, want):
-                    continue
-                if where and not all(
-                    self._seg_where_match(
-                        seg, col, bound,
-                        self._numeric(types_m.get(col, T.StringType())),
-                    )
-                    for col, bound in where.items()
-                ):
-                    continue
-                parsed += 1
-            layers["segments_total"] = len(m["segments"])
-            layers["segments_parsed"] = parsed
-        schema = self.schema(version)
-        types = {f.name: f.dataType for f in schema.fields}
-        if where:
-            for col, bound in where.items():
-                numeric = self._numeric(types.get(col, T.StringType()))
-                entries = [
-                    e for e in entries
-                    if self._file_matches(e, col, bound, numeric)
-                ]
-        layers["after_zone_maps"] = len(entries)
-        bb = m.get("bucket_by")
-        if where and bb and bb[0] in where:
-            lo, hi = where[bb[0]]
-            if lo is not None and lo == hi:
-                want_b = self._bucket_of_value(bb, lo, types.get(bb[0]))
-                entries = [
-                    e for e in entries
-                    if e.get("bucket") is None or e["bucket"] == want_b
-                ]
-        layers["after_bucket"] = len(entries)
-        bl = m.get("bloom")
-        if where and bl:
-            for col in bl.get("cols", []):
-                if col not in where:
-                    continue
-                lo, hi = where[col]
-                if lo is None or lo != hi:
-                    continue
-                probe = self._bloom_positions(
-                    lo, types.get(col), bl["bits"], bl["k"]
-                )
-                entries = [
-                    e for e in entries
-                    if self._bloom_maybe_contains(e, col, probe)
-                ]
-        layers["after_bloom"] = len(entries)
-        bytes_planned = sum(e["bytes"] for e in entries)
+        layers = {"total": self._n_files(m)}
+        entries = self._entries(m["version"], partitions, where, layers)
         rows = (
             sum(e["rows"] - e.get("dv_rows", 0) for e in entries)
             if all("rows" in e for e in entries)
@@ -1190,10 +1100,10 @@ class ManifestTable:
             "version": m["version"],
             "layers": layers,
             "files_planned": len(entries),
-            "bytes_planned": bytes_planned,
+            "bytes_planned": sum(e["bytes"] for e in entries),
             "rows_upper_bound": rows,
             "skip_ratio": round(1 - len(entries) / max(1, layers["total"]), 4),
-        }
+        }, entries, m
 
     def explain_read(
         self,
@@ -1203,12 +1113,11 @@ class ManifestTable:
     ) -> dict:
         """Operator-facing plan observability (VERDICT r7 item 6): the
         pruning-layer breakdown ``scan_plan`` reports PLUS the stat-less
-        per-column counters ``_read_stats`` records (with its
-        degraded-pruning warning) — all from manifest metadata, no job
+        per-column counters a read records (with its degraded-pruning
+        warning) — one planning pass over manifest metadata, no job
         run. Surfaced by the CLI as ``manifest scan-plan``."""
-        plan = self.scan_plan(version, partitions, where)
-        entries = self._entries(version, partitions, where)
-        plan["stat_less"] = self._read_stats(entries, where)["stat_less"]
+        plan, entries, m = self._explain(version, partitions, where)
+        plan["stat_less"] = self._read_stats(m, entries, where)["stat_less"]
         return plan
 
     def _bucket_of_value(self, bucket_by: list, value, dtype) -> int:
@@ -1234,9 +1143,8 @@ class ManifestTable:
         partition-value list and/or zone-map predicates ``where = {col:
         (lo, hi)}`` (closed interval, either bound None): files whose
         recorded [min, max] can't intersect are never even listed for
-        the scan — manifest-level data skipping. Non-numeric bounds
-        compare in Spark's string-cast form (ISO dates/timestamps order
-        lexicographically)."""
+        the scan — manifest-level data skipping, by the typed rule in
+        ``forklift_spark/zonemap.py``."""
         return [
             os.path.join(self.path, e["path"])
             for e in self._entries(version, partitions, where)
@@ -1305,35 +1213,15 @@ class ManifestTable:
             df = df.drop("__ref", "__pos")
         return df
 
-    def _read_stats(self, entries: list[dict], where: dict | None) -> dict:
-        """Per-read observability (VERDICT r6 item 8): scan_plan explains
-        a read you HAVEN'T run; this records the one you just planned —
-        and WARNS when predicate pruning silently degraded to full-scan
-        because the planned files carry no stats for a ``where`` column
-        (e.g. stat-less entries after a legacy upgrade). Stored on
-        ``self.last_read_stats`` by read()."""
-        out = {
-            "files_planned": len(entries),
-            "bytes_planned": sum(e.get("bytes", 0) for e in entries),
-            "stat_less": {},
-        }
-        for col in (where or {}):
-            miss = sum(
-                1 for e in entries
-                if e.get("stats", {}).get(col) is None
-            )
-            out["stat_less"][col] = miss
-            if miss == len(entries) and miss > 1:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "%s: zone-map pruning on %r degraded to full scan — "
-                    "none of the %d planned files carry stats for it "
-                    "(legacy/stat-less entries?); compact() rewrites "
-                    "them with footer stats",
-                    self.table, col, miss,
-                )
-        return out
+    def _read_stats(self, m: dict, entries: list[dict], where: dict | None) -> dict:
+        """Planning counters of one read (``zonemap.read_stats``,
+        which warns when pruning on a ``where`` column degraded to a
+        full scan, e.g. stat-less entries after a legacy upgrade;
+        ``compact()`` rewrites them with footer stats)."""
+        return zonemap.read_stats(
+            self.table, self._n_files(m), entries, list(where or {}),
+            self._file_stat, lambda e: e.get("bytes", 0),
+        )
 
     def read(
         self,
@@ -1343,22 +1231,15 @@ class ManifestTable:
     ) -> DataFrame:
         """Snapshot read: exactly the files the manifest names, with the
         manifest schema (files predating a column NULL-fill it). With
-        ``where``, zone-map stats skip non-intersecting files at plan
-        time AND the row-level interval filter is applied, so results
-        are correct whether or not a file carries stats. Planning
-        counters for the read land on ``self.last_read_stats`` (see
-        ``_read_stats``); a ``where`` whose pruning degraded to
-        full-scan logs a warning."""
-        schema = self.schema(version)
-        entries = self._entries(version, partitions, where)
-        self.last_read_stats = self._read_stats(entries, where)
-        df = self._read_entries(entries, schema)
-        for col, (lo, hi) in (where or {}).items():
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-        return df
+        ``where``, zone maps skip files at plan time
+        (``forklift_spark/zonemap.py``) AND the row-level interval filter
+        is applied, so results are correct whether or not a file carries
+        stats. Planning counters land on ``self.last_read_stats``."""
+        m = self._raw(version)
+        entries = self._entries(m["version"], partitions, where)
+        self.last_read_stats = self._read_stats(m, entries, where)
+        df = self._read_entries(entries, T.StructType.fromJson(m["schema"]))
+        return zonemap.filter_where(df, where)
 
     # -- commits --------------------------------------------------------------
     def create(
@@ -1587,7 +1468,7 @@ class ManifestTable:
                 )
             else:
                 for seg in base.get("segments", []):
-                    if not match_all and not self._seg_intersects(seg, tset):
+                    if not self._seg_wanted(seg, None if match_all else tset):
                         carried.append(seg)
                         continue
                     es = self._load_segment(seg["path"])
@@ -1958,7 +1839,7 @@ class ManifestTable:
         cur: dict,
         source: DataFrame,
         pk: list[str],
-        prune_cols: list[tuple[str, bool]],
+        prune_cols: list[tuple[str, object]],
         bl_cols: list[tuple[int, str]],
         k_hash: int,
         rows: list | None,
@@ -1980,19 +1861,18 @@ class ManifestTable:
         # about key distinctness — ADVICE r8 high)
         probe_rows = rows
 
-        # point-set checks: (col, numeric, sorted batch values). A
+        # point-set checks: (col, key, sorted keyed batch values). A
         # single interval can't cut the mixed update+insert CDC batch
         # (one old key + one new key spans the whole table); the set can.
         checks = []
         bloom_checks = []
         if rows is not None:
-            for i, (k, num) in enumerate(prune_cols):
-                conv = float if num else str
+            for i, (k, key) in enumerate(prune_cols):
                 vals = sorted(
-                    {conv(r[f"__k{i}"]) for r in rows if r[f"__k{i}"] is not None}
+                    {key(r[f"__k{i}"]) for r in rows if r[f"__k{i}"] is not None}
                 )
                 if vals:
-                    checks.append((k, num, vals))
+                    checks.append((k, key, vals))
             # per-column probe tuples (one k-position tuple per distinct
             # non-NULL batch key): NULL keys never equi-join, and a
             # cast-nulled probe tuple can only keep extra files, never
@@ -2086,7 +1966,7 @@ class ManifestTable:
 
     @staticmethod
     def _pk_rows(
-        rows: list | None, prune_cols: list[tuple[str, bool]], pk: list[str]
+        rows: list | None, prune_cols: list[tuple[str, object]], pk: list[str]
     ) -> list[tuple] | None:
         """The distinct pk tuples of a bounded probe (``rows`` not None)
         in which every pk column rode verbatim — partition rides
@@ -2106,25 +1986,21 @@ class ManifestTable:
 
     def _prune_eligible(
         self, cur: dict, source: DataFrame, pk: list[str]
-    ) -> list[tuple[str, bool]]:
-        """Key columns eligible for zone-map pruning, as (name, numeric):
-        numeric/string only, and the dtype CATEGORY must agree between
-        batch and table (date/timestamp stat formatting across stat
-        sources is not certified for this comparison)."""
+    ) -> list[tuple[str, object]]:
+        """Key columns eligible for zone-map pruning, as (name, key of
+        ``zonemap.key_of``): numeric or string only, with the same key
+        for batch and table (the probe's key frame is built from these
+        values, and takes numeric-or-string columns only)."""
         tmap = {
             f.name: f.dataType
             for f in T.StructType.fromJson(cur["schema"]).fields
         }
         smap = {f.name: f.dataType for f in source.schema.fields}
-        out: list[tuple[str, bool]] = []
+        out: list[tuple[str, object]] = []
         for k in pk:
-            t, s = tmap.get(k), smap.get(k)
-            if t is None or s is None:
-                continue
-            if self._numeric(t) and self._numeric(s):
-                out.append((k, True))
-            elif isinstance(t, T.StringType) and isinstance(s, T.StringType):
-                out.append((k, False))
+            key = zonemap.key_of(tmap.get(k))
+            if key in (float, str) and zonemap.key_of(smap.get(k)) is key:
+                out.append((k, key))
         return out
 
     def _key_frame(
@@ -2190,35 +2066,19 @@ class ManifestTable:
             keys = F.broadcast(keys)
         return keys
 
-    @staticmethod
-    def _zone_survives(entry: dict, checks: list) -> bool:
-        """Point-set zone test: drop the file only when, for some key
-        column with recorded stats, NO batch key lands inside its
-        [min, max] (an all-NULL column can never equi-match). float()
-        is monotone on reals, so the numeric comparison can keep a
-        non-matching file but never drop a matching one; stat-less
-        entries always stay (stats are an optimization, never a
-        correctness gate)."""
-        import bisect
-
-        for k, num, vals in checks:
-            st = entry.get("stats", {}).get(k)
-            if st is None:
-                continue
-            fmin, fmax = st
-            if fmin is None:
-                return False
-            conv = float if num else str
-            fmin, fmax = conv(fmin), conv(fmax)
-            i = bisect.bisect_left(vals, fmin)
-            if i >= len(vals) or vals[i] > fmax:
-                return False
-        return True
+    def _zone_survives(self, entry: dict, checks: list) -> bool:
+        """Point-set zone test (``zonemap.keeps_any``): drop the file
+        only when, for some key column with recorded stats, NO batch key
+        lands inside its [min, max]."""
+        return all(
+            zonemap.keeps_any(self._file_stat(entry, k), vals, key)
+            for k, key, vals in checks
+        )
 
     def _prune_interval(
         self,
         source: DataFrame,
-        prune_cols: list[tuple[str, bool]],
+        prune_cols: list[tuple[str, object]],
         old: list[dict],
     ) -> list[dict]:
         """Interval fallback for unbounded batches: one [min, max] per
@@ -2226,23 +2086,21 @@ class ManifestTable:
         pays the job when some scoped entry actually records stats for
         an eligible column."""
         if not old or not any(
-            k in e.get("stats", {}) for k, _n in prune_cols for e in old
+            k in e.get("stats", {}) for k, _key in prune_cols for e in old
         ):
             return old
         aggs = []
-        for i, (k, _n) in enumerate(prune_cols):
+        for i, (k, _key) in enumerate(prune_cols):
             aggs += [F.min(k).alias(f"l{i}"), F.max(k).alias(f"h{i}")]
         row = source.agg(*aggs).collect()[0]
         bounds = [
-            (k, (row[f"l{i}"], row[f"h{i}"]), num)
-            for i, (k, num) in enumerate(prune_cols)
+            (k, (row[f"l{i}"], row[f"h{i}"]), key)
+            for i, (k, key) in enumerate(prune_cols)
             if row[f"l{i}"] is not None
         ]
-        if not bounds:
-            return old
         return [
             e for e in old
-            if all(self._file_matches(e, k, b, num) for k, b, num in bounds)
+            if all(self._file_matches(e, k, b, key) for k, b, key in bounds)
         ]
 
     def _dv_masked_entries(
@@ -2503,12 +2361,7 @@ class ManifestTable:
                     s["rows"] - s.get("dv_rows", 0) for s in m["segments"]
                 )
             return None
-        want = (
-            {NULL_TOKEN if p is None else str(p) for p in partitions}
-            if partitions is not None
-            else None
-        )
-        entries = self._m_entries(m, want)
+        entries = self._m_entries(m, self._want(partitions))
         if any("rows" not in e for e in entries):
             return None
         # dv positions always reference live files of THIS manifest, and
@@ -2769,9 +2622,7 @@ class ManifestTable:
         anti-joins broadcastable. ``max_retries``: shared OCC loop."""
         def compute(cur: dict) -> dict:
             partition_by = cur["partition_by"]
-            want = None
-            if partitions is not None:
-                want = {NULL_TOKEN if p is None else str(p) for p in partitions}
+            want = self._want(partitions)
             scoped_entries = self._m_entries(cur, want)
             by_part: dict = {}
             for e in scoped_entries:

@@ -5,10 +5,12 @@ Replaces the reference's connection bootstrap (forklift `plan.rb:119-141`
 SparkSession factory. All engine defaults that matter at 100 TB live here:
 
 - AQE on (runtime re-plan: partition coalescing, skew-join splitting).
-- shuffle.partitions sized to cores locally; on a real cluster AQE's
-  coalesce makes the static number mostly irrelevant as long as the
-  initial value is high enough (set via `spark.sql.adaptive.coalescePartitions.
-  initialPartitionNum` on deploy).
+- master `local[SPARK_GRAFT_CPUS]`, 1 core when the variable is unset (a
+  value that is not an integer raises); shuffle.partitions
+  `max(cpus, 8)`. On a real cluster AQE's coalesce makes the static
+  number mostly irrelevant as long as the initial value is high enough
+  (set via `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+  on deploy).
 - UTC session timezone so timestamp semantics are engine-independent
   (and match the DuckDB correctness oracle).
 - Arrow enabled for any pandas-UDF path.
@@ -23,10 +25,15 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> int:
+    """Local core count from ``SPARK_GRAFT_CPUS``: 1 when unset or
+    empty, at least 1 otherwise; a non-integer value raises."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS") or "1"
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "0")))
+        return max(1, int(raw))
     except ValueError:
-        return 0
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS={raw!r} is not an integer core count"
+        ) from None
 
 
 def session_builder(
@@ -36,7 +43,7 @@ def session_builder(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession.Builder:
     """Builder with engine defaults; callers may override anything."""
-    cpus = _cpus() or (os.cpu_count() or 8)
+    cpus = _cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
