@@ -79,12 +79,24 @@ returned schema's field metadata.
 
 **Change Data Feed reads are supported** (r8): ``change_feed()``
 surfaces row-level changes with delta-spark's ``table_changes`` output
-shape (``_change_type`` / ``_commit_version`` / ``_commit_timestamp``)
-— commits carrying ``cdc`` actions read their ``_change_data`` files
-verbatim (add/remove ignored for those commits, per the CDF
-convention); commits without them are synthesized as a row-level diff
-(adds -> inserts, removed live rows -> deletes, DV updates -> the
-newly-masked positions via executor-side bitmap diff).
+shape (``_change_type`` / ``_commit_version`` / ``_commit_timestamp``).
+The per-commit rule, stated once here:
+
+- a commit carrying ``cdc`` actions reads its ``_change_data`` files
+  verbatim, ``_change_type`` included (its add/remove actions are
+  ignored for CDF purposes, per the CDF convention — they would
+  double-count);
+- any other commit is synthesized as a row-level diff: adds are
+  inserts of their live rows, removed files' live rows are deletes,
+  and a DV update emits the newly-masked positions as deletes and the
+  newly-unmasked ones (a restore) as inserts, via executor-side
+  bitmap diff;
+- ``dataChange=false`` actions (OPTIMIZE/compaction) are invisible;
+- every row is read by the snapshot scan (``_scan``: column mapping,
+  the id-mode footer check, partition values, DV masks), under the
+  end version's schema, and stamped with the commit's version and
+  timestamp (``inCommitTimestamp``, then ``commitInfo.timestamp``,
+  then the commit file's mtime — the rule ``history()`` shares).
 
 Other reader-v3 features still degrade LOUDLY via ``DeltaUnsupported``
 instead of returning wrong rows.
@@ -100,6 +112,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from typing import NamedTuple
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -257,6 +270,72 @@ def _cm_physical_type(dt: T.DataType, where: str) -> T.DataType:
     return dt
 
 
+class _Layout(NamedTuple):
+    """A snapshot's columns as the files hold them (``_layout``)."""
+
+    pcols: list[str]  # partition columns, LOGICAL names
+    phys: dict[str, str]  # logical -> physical name, every field
+    # data columns: (field as the files hold it, logical field)
+    data: list[tuple[T.StructField, T.StructField]]
+
+    def partition_values(self, pv: dict) -> dict:
+        """Logical partition column -> its raw ``partitionValues``
+        string (spec: keyed by PHYSICAL name; the logical key is the
+        fallback for writers that didn't)."""
+        return {c: pv.get(self.phys.get(c, c), pv.get(c))
+                for c in self.pcols}
+
+
+def _layout(snap: dict) -> _Layout:
+    """The one column-mapping resolution of a snapshot: its logical
+    partition columns, every field's physical name, and the physical
+    read schema of its data columns with the rename back to logical.
+    Without column mapping every name is its own physical name.
+    ``partitionColumns``: delta-spark records logical names, but the
+    spec leaves it writer-shaped — either resolves to the logical
+    field, and a name that is neither refuses (the column genuinely
+    isn't in the schema)."""
+    schema: T.StructType = snap["schema"]
+    pcols = list(snap["partition_columns"])
+    cm = snap.get("cm_mode", "none") != "none"
+    if not cm:
+        phys = {f.name: f.name for f in schema.fields}
+    else:
+        phys = {f.name: _cm_phys_name(f, f.name) for f in schema.fields}
+        by_phys = {pn: c for c, pn in phys.items()}
+        for i, c in enumerate(pcols):
+            if c not in phys:
+                if c not in by_phys:
+                    raise DeltaUnsupported(
+                        f"columnMapping: partition column {c!r} matches "
+                        "neither a logical field name nor any field's "
+                        "physicalName")
+                pcols[i] = by_phys[c]
+    # nested struct fields rename by a positional struct cast back to
+    # the logical type (same types, so Catalyst folds it into the scan)
+    data = [(T.StructField(phys[f.name],
+                           _cm_physical_type(f.dataType, f.name),
+                           f.nullable) if cm else f, f)
+            for f in schema.fields if f.name not in pcols]
+    return _Layout(pcols, phys, data)
+
+
+def _actions(path: str):
+    """The actions of a JSON-lines log file (a commit, or a JSON v2
+    checkpoint), parsed one per line."""
+    with open(path) as fh:
+        for line in fh:
+            line = line.strip()
+            if line:
+                yield json.loads(line)
+
+
+def _file_actions(acts: list[dict]) -> tuple[list[dict], list[dict]]:
+    """A commit's ``add`` and ``remove`` actions."""
+    return ([a["add"] for a in acts if "add" in a],
+            [a["remove"] for a in acts if "remove" in a])
+
+
 def _entry_of(a: dict) -> dict:
     """Live-file entry from an ``add`` action: partition values, DV
     descriptor, tags, plus the fields the read planner prunes with —
@@ -280,12 +359,6 @@ def _decoded_path():
     return F.url_decode(F.regexp_replace(
         F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", ""),
         r"\+", "%2B"))
-
-
-def _raise_cm_pcol(c: str):
-    raise DeltaUnsupported(
-        f"columnMapping: partition column {c!r} matches neither a "
-        "logical field name nor any field's physicalName")
 
 
 def _cm_verify_field_ids(paths: list[str], fields: list[T.StructField],
@@ -331,6 +404,13 @@ def _cm_verify_field_ids(paths: list[str], fields: list[T.StructField],
 
 
 class DeltaLiteTable:
+    # Replay-path cutoff (r8, measured in SCALE_DELTA_r8.json): the
+    # pure-Python JSON replay costs ~40us/commit while reading the
+    # checkpoint parquet is a flat ~0.25s Spark job, so a full JSON
+    # history of at most this many commits replays ~100x faster than
+    # the checkpoint; past a few thousand commits the checkpoint wins.
+    JSON_REPLAY_MAX = 512
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         # absolute path: the DV anti-join matches file paths built from
@@ -373,10 +453,49 @@ class DeltaLiteTable:
         with open(p) as fh:
             return json.load(fh)
 
+    def _needs_checkpoint(self, target: int) -> bool:
+        """The one replay-path rule: does replaying to ``target`` need
+        the parquet checkpoint? Yes when retention cleaned any JSON
+        commit in 0..target, or when that history is longer than
+        ``JSON_REPLAY_MAX`` commits and a checkpoint at or before
+        ``target`` exists; otherwise the JSON commits alone replay it."""
+        have = set(self.versions())
+        if any(v not in have for v in range(target + 1)):
+            return True
+        ck = self._last_checkpoint()
+        return (target + 1 > self.JSON_REPLAY_MAX and ck is not None
+                and int(ck["version"]) <= target)
+
+    def _read_commit(self, v: int) -> tuple[list[dict], int]:
+        """Commit ``v``: its actions and its timestamp in epoch millis
+        (``commitInfo.inCommitTimestamp``, then ``commitInfo.timestamp``,
+        then the commit file's mtime). Every ``protocol`` action is
+        checked; a commit absent from disk raises the one ``missing
+        commit`` error."""
+        path = os.path.join(self.log_dir, f"{v:020d}.json")
+        try:
+            acts = list(_actions(path))
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"missing commit {v} in {self.log_dir} (log cleaned past "
+                "the usable checkpoint? history reads need the JSON "
+                "commits)") from None
+        ts = None
+        for act in acts:
+            if "protocol" in act:
+                self._check_protocol(act["protocol"])
+            elif "commitInfo" in act:
+                ci = act["commitInfo"]
+                ts = ci.get("inCommitTimestamp") or ci.get("timestamp") or ts
+        if ts is None:
+            ts = os.path.getmtime(path) * 1000
+        return acts, int(ts)
+
     # -- state reconstruction ------------------------------------------------
 
     def snapshot(self, version: int | None = None) -> dict:
-        """Replay the log to ``version`` (default: latest): returns
+        """Replay the log to ``version`` (default: latest), from the
+        checkpoint when ``_needs_checkpoint`` says so: returns
         {"version", "schema" (StructType), "partition_columns",
         "files": {path: partitionValues}}."""
         latest = self.latest_version()
@@ -388,55 +507,20 @@ class DeltaLiteTable:
         meta: dict | None = None
         proto: dict | None = None
         start = 0
-
-        have_json = set(self.versions())
         ck = self._last_checkpoint()
-        # Replay-path choice (r8, measured in SCALE_DELTA_r8.json): the
-        # pure-Python JSON replay costs ~40us/commit while reading the
-        # checkpoint parquet is a flat ~0.25s Spark job — so when the
-        # FULL JSON history up to target is still on disk and short,
-        # JSON-only replay wins by ~100x. The checkpoint remains
-        # required when retention cleaned the early commits, and wins
-        # past a few thousand commits.
-        _JSON_REPLAY_MAX = 512
-        json_covers = all(v in have_json for v in range(0, target + 1))
-        if (
-            ck
-            and ck["version"] <= target
-            and not (json_covers and target + 1 <= _JSON_REPLAY_MAX)
-        ):
-            meta2, files2, proto2 = self._read_checkpoint(
-                int(ck["version"]))
-            meta = meta2 or meta
-            proto = proto2 or proto
-            files.update(files2)
+        if ck and int(ck["version"]) <= target \
+                and self._needs_checkpoint(target):
+            meta, files, proto = self._read_checkpoint(int(ck["version"]))
             start = int(ck["version"]) + 1
 
-        have = set(self.versions())
         for v in range(start, target + 1):
-            if v not in have:
-                raise FileNotFoundError(
-                    f"missing commit {v} (log cleaned past the usable "
-                    f"checkpoint?) at {self.log_dir}"
-                )
-            adds: list[dict] = []
-            removes: list[dict] = []
-            with open(os.path.join(self.log_dir, f"{v:020d}.json")) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    act = json.loads(line)
-                    if "protocol" in act:
-                        self._check_protocol(act["protocol"])
-                        proto = act["protocol"]
-                    elif "metaData" in act:
-                        meta = act["metaData"]
-                    elif "add" in act:
-                        adds.append(act["add"])
-                    elif "remove" in act:
-                        removes.append(act["remove"])
-            self._reconcile_commit(files, adds, removes)
+            acts, _ts = self._read_commit(v)
+            for act in acts:
+                if "protocol" in act:
+                    proto = act["protocol"]
+                elif "metaData" in act:
+                    meta = act["metaData"]
+            self._reconcile_commit(files, *_file_actions(acts))
 
         if meta is None:
             raise ValueError(f"no metaData action found in {self.log_dir}")
@@ -525,24 +609,19 @@ class DeltaLiteTable:
         proto: dict | None = None
         ckpt_meta: dict | None = None
         sidecars: list[dict] = []
-        with open(path) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line)
-                if "protocol" in act:
-                    self._check_protocol(act["protocol"])
-                    proto = act["protocol"]
-                elif "metaData" in act:
-                    meta = act["metaData"]
-                elif "checkpointMetadata" in act:
-                    ckpt_meta = act["checkpointMetadata"]
-                elif "sidecar" in act:
-                    sidecars.append(act["sidecar"])
-                elif "add" in act:
-                    a = act["add"]
-                    files[unquote(a["path"])] = _entry_of(a)
+        for act in _actions(path):
+            if "protocol" in act:
+                self._check_protocol(act["protocol"])
+                proto = act["protocol"]
+            elif "metaData" in act:
+                meta = act["metaData"]
+            elif "checkpointMetadata" in act:
+                ckpt_meta = act["checkpointMetadata"]
+            elif "sidecar" in act:
+                sidecars.append(act["sidecar"])
+            elif "add" in act:
+                a = act["add"]
+                files[unquote(a["path"])] = _entry_of(a)
         return meta, files, proto, ckpt_meta, sidecars
 
     def _parse_ckpt_parquet(self, paths: list[str],
@@ -680,9 +759,11 @@ class DeltaLiteTable:
     def version_as_of(self, as_of_ms: int) -> int:
         """TIMESTAMP AS OF resolution, per the Delta spec's rule: the
         latest commit whose file modification time is at or before the
-        given epoch millis (commit JSONs are the log's clock). Raises
-        when every retained commit is newer — returning a later state
-        would silently violate the requested as-of point."""
+        given epoch millis. The clock is the commit file's mtime ONLY —
+        not the ``commitInfo`` timestamps ``history()`` and
+        ``change_feed()`` report. Raises when every retained commit is
+        newer — returning a later state would silently violate the
+        requested as-of point."""
         cands = []
         for v in self.versions():
             p = os.path.join(self.log_dir, f"{v:020d}.json")
@@ -703,22 +784,15 @@ class DeltaLiteTable:
         widened by 1 ms (spec writers truncate timestamp stats to
         milliseconds). Returns the surviving files; planning counters
         land on ``self.last_read_stats``."""
-        schema: T.StructType = snap["schema"]
-        pcols = set(snap["partition_columns"])
-        cm = snap.get("cm_mode", "none")
-        types = {f.name: f.dataType for f in schema.fields}
-        phys = {
-            f.name: ((f.metadata or {}).get(_CM_PHYS, f.name)
-                     if cm != "none" else f.name)
-            for f in schema.fields
-        }
+        lay = _layout(snap)
+        pcols = set(lay.pcols)
+        types = {f.name: f.dataType for f in snap["schema"].fields}
         checks = zonemap.checks(where, types)
 
         def stat(e: dict, col: str):
-            pk = phys[col]
+            pk = lay.phys[col]
             if col in pcols:
-                pv = e.get("pv") or {}
-                v = pv.get(pk, pv.get(col))
+                v = lay.partition_values(e.get("pv") or {})[col]
                 if v == "" and not isinstance(types[col], T.StringType):
                     v = None
                 return zonemap.ALL_NULL if v is None else (v, v)
@@ -793,32 +867,19 @@ class DeltaLiteTable:
         if to_v > latest:
             raise ValueError(f"version {to_v} > latest {latest}")
         base = self.snapshot(int(from_version))
-        have = set(self.versions())
         added: dict[str, dict] = {}
         removed = 0
         for v in range(int(from_version) + 1, to_v + 1):
-            if v not in have:
-                raise FileNotFoundError(
-                    f"missing commit {v} in {self.log_dir} (log cleaned?)")
-            with open(os.path.join(self.log_dir, f"{v:020d}.json")) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    act = json.loads(line)
-                    if "add" in act:
-                        a = act["add"]
-                        if a.get("deletionVector"):
-                            # a DV-carrying add IS a delete (of the
-                            # masked rows) — not append-only
-                            removed += 1
-                            continue
-                        added[unquote(a["path"])] = {
-                            "pv": a.get("partitionValues") or {},
-                            "dv": None,
-                        }
-                    elif "remove" in act:
-                        removed += 1
+            adds, removes = _file_actions(self._read_commit(v)[0])
+            removed += len(removes)
+            for a in adds:
+                if a.get("deletionVector"):
+                    # a DV-carrying add IS a delete (of the masked
+                    # rows) — not append-only
+                    removed += 1
+                    continue
+                added[unquote(a["path"])] = {
+                    "pv": a.get("partitionValues") or {}, "dv": None}
         if removed:
             raise NotImplementedError(
                 f"version range {from_version}..{to_v} is not append-only "
@@ -826,15 +887,10 @@ class DeltaLiteTable:
                 "would misrepresent updates/deletes as inserts — use "
                 "change_feed() for the full row-level CDF, or read "
                 "full snapshots instead")
-        schema: T.StructType = base["schema"]
-        pcols = base["partition_columns"]
         if not added:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], base["schema"])
         # same partition-value attachment as read()
-        snap = {"schema": schema, "partition_columns": pcols,
-                "cm_mode": base.get("cm_mode", "none"),
-                "files": added, "version": to_v}
-        return self._scan(snap)
+        return self._scan({**base, "files": added})
 
     def files(self, version: int | None = None) -> DataFrame:
         """Live logical files as a metadata DataFrame (path, partition
@@ -861,31 +917,19 @@ class DeltaLiteTable:
         return self.spark.createDataFrame(rows, schema)
 
     def history(self) -> DataFrame:
-        """Commit history as a metadata DataFrame: version, timestamp
-        (commitInfo when present, else the commit file's mtime),
+        """Commit history as a metadata DataFrame: version, timestamp,
         operation, add/remove action counts — the reader-side answer to
-        delta-spark's ``DESCRIBE HISTORY``."""
+        delta-spark's ``DESCRIBE HISTORY``. The timestamp is the one
+        commit-timestamp rule ``change_feed()`` also stamps rows with:
+        ``commitInfo.inCommitTimestamp``, then ``commitInfo.timestamp``,
+        then the commit file's mtime."""
         rows = []
         for v in self.versions():
-            fp = os.path.join(self.log_dir, f"{v:020d}.json")
-            adds = removes = 0
-            ts = int(os.path.getmtime(fp) * 1000)
-            op = None
-            with open(fp) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    act = json.loads(line)
-                    if "add" in act:
-                        adds += 1
-                    elif "remove" in act:
-                        removes += 1
-                    elif "commitInfo" in act:
-                        ci = act["commitInfo"]
-                        op = ci.get("operation")
-                        ts = int(ci.get("timestamp") or ts)
-            rows.append((v, ts, op, adds, removes))
+            acts, ts = self._read_commit(v)
+            op = next((a["commitInfo"].get("operation") for a in acts
+                       if "commitInfo" in a), None)
+            adds, removes = _file_actions(acts)
+            rows.append((v, ts, op, len(adds), len(removes)))
         return self.spark.createDataFrame(
             rows, "version long, timestamp_ms long, operation string, "
                   "n_adds long, n_removes long")
@@ -963,34 +1007,6 @@ class DeltaLiteTable:
 
         return position_changelog(old_side, new_side, names, net)
 
-    def _deleted_positions(self, dv_files: dict[str, dict]) -> DataFrame:
-        """Expand DV descriptors into a (``___path``, ``___pos``) frame
-        of deleted row positions. The bitmap expansion runs in EXECUTORS
-        (mapInPandas over the descriptor rows — metadata-sized), so a
-        DV marking millions of rows never materializes on the driver;
-        inline DVs travel in the descriptor itself, on-disk DVs are read
-        from shared storage by the task."""
-        import pandas as pd
-
-        table_path = self.path
-        rows = [
-            (os.path.join(table_path, p), json.dumps(e["dv"]))
-            for p, e in dv_files.items()
-        ]
-        ddf = self.spark.createDataFrame(
-            rows, "___path string, ___dv string"
-        ).repartition(min(len(rows), 32))
-
-        def expand(batches):
-            for pdf in batches:
-                for path, dvj in zip(pdf["___path"], pdf["___dv"]):
-                    pos = dv_positions(table_path, json.loads(dvj))
-                    yield pd.DataFrame(
-                        {"___path": path, "___pos": pd.array(pos, dtype="int64")}
-                    )
-
-        return ddf.mapInPandas(expand, "___path string, ___pos long")
-
     def _dv_diff_positions(self, diffs: list[tuple[str, dict | None,
                                                    dict | None]]
                            ) -> DataFrame:
@@ -998,9 +1014,12 @@ class DeltaLiteTable:
         (``___path``, ``___pos``, ``___ct``) frame: positions newly
         masked (in new, not old) surface as ``delete``; positions
         UNmasked (in old, not new — a row restore) surface as
-        ``insert``. Same executor-side expansion discipline as
-        :meth:`_deleted_positions` — the bitmaps never land on the
-        driver."""
+        ``insert``. With no old DV this is the file's deleted set. The
+        bitmap expansion runs in EXECUTORS (mapInPandas over the
+        descriptor rows — metadata-sized), so a DV marking millions of
+        rows never materializes on the driver; inline DVs travel in the
+        descriptor itself, on-disk DVs are read from shared storage by
+        the task."""
         import pandas as pd
 
         table_path = self.path
@@ -1018,12 +1037,14 @@ class DeltaLiteTable:
             for pdf in batches:
                 for path, oj, nj in zip(pdf["___path"], pdf["___old"],
                                         pdf["___new"]):
-                    old = set(dv_positions(table_path, json.loads(oj))) \
-                        if oj else set()
-                    new = set(dv_positions(table_path, json.loads(nj))) \
-                        if nj else set()
-                    dels = sorted(new - old)
-                    ins = sorted(old - new)
+                    new = dv_positions(table_path, json.loads(nj)) \
+                        if nj else []
+                    if not oj:  # no old side: no set building
+                        dels, ins = new, []
+                    else:
+                        old = set(dv_positions(table_path, json.loads(oj)))
+                        dels = sorted(set(new) - old)
+                        ins = sorted(old - set(new))
                     yield pd.DataFrame({
                         "___path": path,
                         "___pos": pd.array(dels + ins, dtype="int64"),
@@ -1041,164 +1062,43 @@ class DeltaLiteTable:
         under the end-version schema plus the three CDF columns
         delta-spark's ``table_changes`` emits: ``_change_type``
         (insert / delete / update_preimage / update_postimage),
-        ``_commit_version``, ``_commit_timestamp``.
-
-        Per commit, per the Delta spec's CDF convention:
-
-        - commits carrying ``cdc`` actions: the ``_change_data`` files
-          ARE the feed for that commit — their ``_change_type`` column
-          is surfaced verbatim and the commit's add/remove actions are
-          ignored for CDF purposes (they double-count otherwise);
-        - commits without ``cdc`` actions are synthesized as a
-          row-level diff, the same rule delta-spark applies to
-          insert-only commits, extended to every action shape: new
-          data files are ``insert`` rows, removed files' LIVE rows
-          (deletion vector applied) are ``delete`` rows, and a DV
-          update emits exactly the newly-masked positions as
-          ``delete`` (newly-UNmasked positions — a restore — as
-          ``insert``), computed by executor-side bitmap diff;
-        - ``dataChange=false`` actions (OPTIMIZE/compaction) are
-          invisible, as the spec requires.
-
-        ``_commit_timestamp`` comes from the commit's ``commitInfo``
-        (``inCommitTimestamp`` preferred, then ``timestamp``), falling
-        back to the commit file's modification time — the same clock
-        ``version_as_of`` uses. Reference analog: the incremental
-        consumption patterns in lib/forklift/patterns/mysql_patterns.rb
-        (HWM pipes), upgraded to full row-level CDC."""
+        ``_commit_version``, ``_commit_timestamp``. Which rows each
+        commit contributes, and its timestamp, follow the per-commit
+        rule in the module docstring ("Change Data Feed reads").
+        Reference analog: the incremental consumption patterns in
+        lib/forklift/patterns/mysql_patterns.rb (HWM pipes), upgraded
+        to full row-level CDC."""
         latest = self.latest_version()
         to_v = latest if to_version is None else int(to_version)
         if to_v > latest:
             raise ValueError(f"version {to_v} > latest {latest}")
         from_v = int(from_version)
         end = self.snapshot(to_v)
-        schema: T.StructType = end["schema"]
-        pcols = list(end["partition_columns"])
-        cm = end.get("cm_mode", "none")
+        names = end["schema"].fieldNames()
         cur = {p: dict(e) for p, e
                in self.snapshot(from_v)["files"].items()}
-        have = set(self.versions())
 
-        data_fields = [f for f in schema.fields if f.name not in pcols]
-        if cm != "none":
-            by_phys = {
-                (f.metadata or {}).get(_CM_PHYS): f.name
-                for f in schema.fields
-            }
-            logical = set(schema.fieldNames())
-            pcols = [
-                c if c in logical else by_phys[c] if c in by_phys
-                else _raise_cm_pcol(c) for c in pcols
-            ]
-            pv_keys = {
-                f.name: (f.metadata or {}).get(_CM_PHYS, f.name)
-                for f in schema.fields
-            }
-            renames: list[tuple] | None = []
-            read_fields = []
-            for f in data_fields:
-                pn = _cm_phys_name(f, f.name)
-                pdt = _cm_physical_type(f.dataType, f.name)
-                read_fields.append(T.StructField(pn, pdt, f.nullable))
-                renames.append((pn, pdt, f))
-            data_schema = T.StructType(read_fields)
-        else:
-            renames = None
-            data_schema = T.StructType(data_fields)
-            pv_keys = {f.name: f.name for f in schema.fields}
-        ptypes = {f.name: f.dataType for f in schema.fields
-                  if f.name in pcols}
-        # cdc files carry _change_type as a literal extra data column
-        # (never column-mapped: it is not a schema field)
-        cdc_schema = T.StructType(
-            list(data_schema.fields)
-            + [T.StructField("_change_type", T.StringType())]
-        )
-
-        def to_logical(df: DataFrame, with_ct: bool) -> DataFrame:
-            if renames is None:
-                return df
-            cols = [
-                (F.col(pn).cast(f.dataType) if pdt != f.dataType
-                 else F.col(pn)).alias(f.name)
-                for pn, pdt, f in renames
-            ]
-            if with_ct:
-                cols.append(F.col("_change_type"))
-            return df.select(*cols)
-
-        def finish(df: DataFrame, pv: dict, v: int, ts_ms: int,
-                   ct: str | None) -> DataFrame:
-            if ct is not None:
-                df = df.withColumn("_change_type", F.lit(ct))
-            for c in pcols:
-                val = pv.get(pv_keys.get(c, c), pv.get(c))
-                if val is None or (val == "" and not isinstance(
-                        ptypes[c], T.StringType)):
-                    lit = F.lit(None).cast(ptypes[c])
-                else:
-                    lit = F.lit(val).cast(ptypes[c])
-                df = df.withColumn(c, lit)
-            df = df.withColumn("_commit_version",
-                               F.lit(v).cast("bigint"))
-            df = df.withColumn(
-                "_commit_timestamp",
-                F.timestamp_millis(F.lit(int(ts_ms)).cast("bigint")))
-            return df.select(*[f.name for f in schema.fields],
-                             "_change_type", "_commit_version",
-                             "_commit_timestamp")
+        def scan(files: dict, **kw) -> DataFrame:
+            return self._scan({**end, "files": files}, **kw)
 
         parts: list[DataFrame] = []
         for v in range(from_v + 1, to_v + 1):
-            if v not in have:
-                raise FileNotFoundError(
-                    f"missing commit {v} in {self.log_dir} "
-                    "(log cleaned? CDF needs the JSON history)")
-            cpath = os.path.join(self.log_dir, f"{v:020d}.json")
-            cdc: list[dict] = []
-            adds: list[dict] = []
-            removes: list[dict] = []
-            ts_ms: int | None = None
-            with open(cpath) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    act = json.loads(line)
-                    if "cdc" in act:
-                        cdc.append(act["cdc"])
-                    elif "add" in act:
-                        adds.append(act["add"])
-                    elif "remove" in act:
-                        removes.append(act["remove"])
-                    elif "protocol" in act:
-                        self._check_protocol(act["protocol"])
-                    elif "commitInfo" in act:
-                        ci = act["commitInfo"]
-                        ts_ms = ci.get("inCommitTimestamp") \
-                            or ci.get("timestamp") or ts_ms
-            if ts_ms is None:
-                ts_ms = int(os.path.getmtime(cpath) * 1000)
-
+            acts, ts_ms = self._read_commit(v)
+            adds, removes = _file_actions(acts)
+            cdc = [a["cdc"] for a in acts if "cdc" in a]
+            rows: list[DataFrame] = []
             if cdc:
-                by_pv: dict[tuple, list[str]] = {}
-                pvs: dict[tuple, dict] = {}
-                for c in cdc:
-                    pv = c.get("partitionValues") or {}
-                    key = tuple(sorted(pv.items()))
-                    by_pv.setdefault(key, []).append(
-                        os.path.join(self.path, unquote(c["path"])))
-                    pvs[key] = pv
-                for key, paths in sorted(by_pv.items()):
-                    df = self.spark.read.schema(cdc_schema).parquet(
-                        *paths)
-                    parts.append(finish(to_logical(df, True), pvs[key],
-                                        v, ts_ms, None))
+                # _change_type is a literal extra column of the cdc
+                # files, never column-mapped (it is not a schema field)
+                rows.append(scan(
+                    {unquote(c["path"]): {"pv": c.get("partitionValues")
+                                          or {}} for c in cdc},
+                    extra=(T.StructField("_change_type", T.StringType()),)))
             else:
-                inserts: list[tuple[str, dict, dict | None]] = []
-                deletes: list[tuple[str, dict, dict | None]] = []
+                inserts: dict[str, dict] = {}
+                deletes: dict[str, dict] = {}
                 diffs: list[tuple[str, dict | None, dict | None]] = []
-                diff_pvs: dict[str, dict] = {}
+                diff_files: dict[str, dict] = {}
                 readded: set[str] = set()
                 for a in adds:
                     if not a.get("dataChange", True):
@@ -1209,11 +1109,11 @@ class DeltaLiteTable:
                     ndv = a.get("deletionVector")
                     pv = a.get("partitionValues") or {}
                     if old is None:
-                        inserts.append((p, pv, ndv))
+                        inserts[p] = {"pv": pv, "dv": ndv}
                     elif dv_unique_id(ndv) != dv_unique_id(
                             old.get("dv")):
                         diffs.append((p, old.get("dv"), ndv))
-                        diff_pvs[p] = pv or old["pv"]
+                        diff_files[p] = {"pv": pv or old["pv"]}
                 for r in removes:
                     if not r.get("dataChange", True):
                         continue
@@ -1232,190 +1132,98 @@ class DeltaLiteTable:
                     if rdv is not None and dv_unique_id(rdv) != \
                             dv_unique_id(old.get("dv")):
                         continue  # removes a superseded logical file
-                    deletes.append((
-                        p, r.get("partitionValues") or old["pv"],
-                        old.get("dv")))
-
-                def emit(entries: list[tuple[str, dict, dict | None]],
-                         ct: str) -> None:
-                    plain: dict[tuple, list[str]] = {}
-                    pvs2: dict[tuple, dict] = {}
-                    masked: dict[str, dict] = {}
-                    masked_pv: dict[str, dict] = {}
-                    for p, pv, dv in entries:
-                        if dv:
-                            masked[p] = {"dv": dv}
-                            masked_pv[p] = pv
-                        else:
-                            key = tuple(sorted(pv.items()))
-                            plain.setdefault(key, []).append(
-                                os.path.join(self.path, p))
-                            pvs2[key] = pv
-                    for key, paths in sorted(plain.items()):
-                        df = self.spark.read.schema(data_schema) \
-                            .parquet(*paths)
-                        parts.append(finish(to_logical(df, False),
-                                            pvs2[key], v, ts_ms, ct))
-                    if masked:
-                        deleted = self._deleted_positions(masked)
-                        for p, e in sorted(masked.items()):
-                            df = (
-                                self.spark.read.schema(data_schema)
-                                .parquet(os.path.join(self.path, p))
-                                .withColumn("___path", _decoded_path())
-                                .withColumn(
-                                    "___pos",
-                                    F.col("_metadata.row_index"))
-                                .join(deleted, ["___path", "___pos"],
-                                      "left_anti")
-                                .drop("___path", "___pos")
-                            )
-                            parts.append(finish(
-                                to_logical(df, False), masked_pv[p],
-                                v, ts_ms, ct))
-
-                emit(inserts, "insert")
-                emit(deletes, "delete")
+                    deletes[p] = {"pv": r.get("partitionValues")
+                                  or old["pv"], "dv": old.get("dv")}
+                for files, ct in ((inserts, "insert"), (deletes, "delete")):
+                    if files:
+                        rows.append(scan(files).withColumn(
+                            "_change_type", F.lit(ct)))
                 if diffs:
-                    dpos = self._dv_diff_positions(diffs)
-                    for p, _odv, _ndv in sorted(diffs):
-                        df = (
-                            self.spark.read.schema(data_schema)
-                            .parquet(os.path.join(self.path, p))
-                            .withColumn("___path", _decoded_path())
-                            .withColumn("___pos",
-                                        F.col("_metadata.row_index"))
-                            .join(dpos, ["___path", "___pos"], "inner")
-                            .withColumnRenamed("___ct", "_change_type")
-                            .drop("___path", "___pos")
-                        )
-                        parts.append(finish(
-                            to_logical(df, True), diff_pvs[p],
-                            v, ts_ms, None))
-
+                    rows.append(
+                        scan(diff_files, keep_meta=True)
+                        .join(self._dv_diff_positions(diffs),
+                              ["___path", "___pos"])
+                        .withColumnRenamed("___ct", "_change_type"))
+            parts += [df.select(
+                *names, "_change_type",
+                F.lit(v).cast("bigint").alias("_commit_version"),
+                F.timestamp_millis(F.lit(ts_ms).cast("bigint"))
+                .alias("_commit_timestamp")) for df in rows]
             self._reconcile_commit(cur, adds, removes)
 
-        cdf_schema = T.StructType(
-            list(schema.fields) + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType(), False),
-                T.StructField("_commit_timestamp", T.TimestampType(),
-                              False),
-            ])
         if not parts:
-            return self.spark.createDataFrame([], cdf_schema)
+            return self.spark.createDataFrame([], T.StructType(
+                list(end["schema"].fields) + [
+                    T.StructField("_change_type", T.StringType()),
+                    T.StructField("_commit_version", T.LongType(), False),
+                    T.StructField("_commit_timestamp", T.TimestampType(),
+                                  False),
+                ]))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
 
-    def _scan(self, snap: dict, keep_meta: bool = False) -> DataFrame:
-        """``keep_meta`` carries normalized ``___path``/``___pos``
-        provenance columns (decoded absolute path + physical row
-        position) through to the result — the changelog diff keys on
-        them."""
+    def _scan(self, snap: dict, keep_meta: bool = False,
+              extra: tuple[T.StructField, ...] = ()) -> DataFrame:
+        """Read ``snap["files"]``: one distributed parquet scan per
+        partition-value combination, unioned lazily. Files are read
+        under their physical schema and renamed back to logical
+        (``_layout``; in ``id`` mode the footers are checked first),
+        partition values are attached as typed literals (empty string
+        is NULL for non-strings, per the spec's serialization rules),
+        and DV-masked files are anti-joined on their deleted positions.
+        ``extra``: fields read verbatim after the data columns, never
+        column-mapped (the CDF ``_change_type``). ``keep_meta`` carries
+        normalized ``___path``/``___pos`` provenance columns (decoded
+        absolute path + physical row position) through to the result —
+        the changelog diff keys on them."""
         schema: T.StructType = snap["schema"]
-        pcols = list(snap["partition_columns"])
-        cm = snap.get("cm_mode", "none")
-        if cm != "none":
-            # partitionColumns: delta-spark records logical names, but
-            # the spec leaves it writer-shaped — accept either and
-            # resolve to the logical field (refuse on neither: the
-            # column genuinely isn't in the schema)
-            by_phys = {
-                (f.metadata or {}).get(_CM_PHYS): f.name
-                for f in schema.fields
-            }
-            logical = set(schema.fieldNames())
-            pcols = [
-                c if c in logical else by_phys[c] if c in by_phys
-                else _raise_cm_pcol(c) for c in pcols
-            ]
-            # add.partitionValues are keyed by PHYSICAL name (spec:
-            # 'track partition values ... with the physical name');
-            # fall back to the logical key for writers that didn't
-            pv_keys = {
-                f.name: (f.metadata or {}).get(_CM_PHYS, f.name)
-                for f in schema.fields
-            }
-        else:
-            pv_keys = {f.name: f.name for f in schema.fields}
-        ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
-        data_fields = [f for f in schema.fields if f.name not in pcols]
-        if cm != "none":
-            # read the files under their PHYSICAL schema, then rename
-            # back to logical: top level by alias, nested names by a
-            # positional struct cast (same types, so Catalyst folds it
-            # into the scan projection)
-            renames: list[tuple[str, T.DataType, T.StructField]] | None = []
-            read_fields = []
-            for f in data_fields:
-                pn = _cm_phys_name(f, f.name)
-                pdt = _cm_physical_type(f.dataType, f.name)
-                read_fields.append(T.StructField(pn, pdt, f.nullable))
-                renames.append((pn, pdt, f))
-            data_schema = T.StructType(read_fields)
-        else:
-            renames = None
-            data_schema = T.StructType(data_fields)
-        dv_files = {p: e for p, e in snap["files"].items() if e.get("dv")}
+        lay = _layout(snap)
+        ptypes = {f.name: f.dataType for f in schema.fields
+                  if f.name in lay.pcols}
+        read_schema = T.StructType([rf for rf, _f in lay.data] + list(extra))
+        carry = [f.name for f in extra] + (
+            ["___path", "___pos"] if keep_meta else [])
+        logical = [(F.col(rf.name).cast(f.dataType)
+                    if rf.dataType != f.dataType
+                    else F.col(rf.name)).alias(f.name)
+                   for rf, f in lay.data] + carry
         groups: dict[tuple, dict[bool, list[str]]] = {}
-        for path, entry in snap["files"].items():
-            pv = entry["pv"]
-            key = tuple(
-                pv.get(pv_keys.get(c, c), pv.get(c)) for c in pcols
-            )
-            g = groups.setdefault(key, {False: [], True: []})
-            g[path in dv_files].append(os.path.join(self.path, path))
-        if cm == "id":
+        for path, e in snap["files"].items():
+            key = tuple(lay.partition_values(e["pv"]).values())
+            groups.setdefault(key, {False: [], True: []})[
+                bool(e.get("dv"))].append(os.path.join(self.path, path))
+        if snap.get("cm_mode") == "id":
             _cm_verify_field_ids(
                 sorted(os.path.join(self.path, p) for p in snap["files"]),
-                data_fields,
-            )
-        deleted = self._deleted_positions(dv_files) if dv_files else None
+                [f for _rf, f in lay.data])
+        dv_files = [(p, None, e["dv"]) for p, e in snap["files"].items()
+                    if e.get("dv")]
+        deleted = self._dv_diff_positions(dv_files).drop("___ct") \
+            if dv_files else None
 
-        meta_cols = ["___path", "___pos"] if keep_meta else []
+        def read(paths: list[str], masked: bool) -> DataFrame:
+            df = self.spark.read.schema(read_schema).parquet(*paths)
+            if masked or keep_meta:
+                df = (df.withColumn("___path", _decoded_path())
+                      .withColumn("___pos", F.col("_metadata.row_index")))
+            if masked:
+                # attach the scan's physical row position and anti-join
+                # the deleted set — the same plan shape iceberglite uses
+                # for position deletes (per-file positions, no shuffle
+                # of the big side beyond the join itself)
+                df = df.join(deleted, ["___path", "___pos"], "left_anti")
+            return df.select(*logical)
 
-        def to_logical(df: DataFrame) -> DataFrame:
-            if renames is None:
-                return df
-            return df.select(*[
-                (F.col(pn).cast(f.dataType) if pdt != f.dataType
-                 else F.col(pn)).alias(f.name)
-                for pn, pdt, f in renames
-            ], *meta_cols)
         parts = []
         for key, by_dv in sorted(groups.items(), key=lambda kv: str(kv[0])):
-            sub = []
-            if by_dv[False]:
-                plain = self.spark.read.schema(data_schema).parquet(
-                    *by_dv[False])
-                if keep_meta:
-                    plain = (plain
-                             .withColumn("___path", _decoded_path())
-                             .withColumn("___pos",
-                                         F.col("_metadata.row_index")))
-                sub.append(plain)
-            if by_dv[True]:
-                # masked files: attach the scan's physical row position,
-                # anti-join the deleted set, drop the helper columns —
-                # the same plan shape iceberglite uses for position
-                # deletes (per-file positions, no shuffle of the big
-                # side beyond the join itself)
-                masked = (
-                    self.spark.read.schema(data_schema)
-                    .parquet(*by_dv[True])
-                    .withColumn("___path", _decoded_path())
-                    .withColumn("___pos", F.col("_metadata.row_index"))
-                    .join(deleted, ["___path", "___pos"], "left_anti")
-                )
-                if not keep_meta:
-                    masked = masked.drop("___path", "___pos")
-                sub.append(masked)
-            df = to_logical(sub[0])
+            sub = [read(paths, masked) for masked, paths in by_dv.items()
+                   if paths]
+            df = sub[0]
             for s in sub[1:]:
-                df = df.unionByName(to_logical(s))
-            for c, v in zip(pcols, key):
+                df = df.unionByName(s)
+            for c, v in zip(lay.pcols, key):
                 if v is None or (v == "" and not isinstance(
                     ptypes[c], T.StringType
                 )):
@@ -1423,8 +1231,7 @@ class DeltaLiteTable:
                 else:
                     lit = F.lit(v).cast(ptypes[c])
                 df = df.withColumn(c, lit)
-            parts.append(df.select(
-                *[f.name for f in schema.fields], *meta_cols))
+            parts.append(df.select(*schema.fieldNames(), *carry))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1879,17 +1686,8 @@ def checkpoint_delta_export(spark: SparkSession, dest: str,
     snap = t.snapshot(v)
 
     # tombstones: removes from the retained JSON commits up to v
-    tombstones: list[dict] = []
-    for cv in t.versions():
-        if cv > v:
-            continue
-        with open(os.path.join(t.log_dir, f"{cv:020d}.json")) as fh:
-            for line in fh:
-                line = line.strip()
-                if line:
-                    act = json.loads(line)
-                    if "remove" in act:
-                        tombstones.append(act["remove"])
+    tombstones = [r for cv in t.versions() if cv <= v
+                  for r in _file_actions(t._read_commit(cv)[0])[1]]
 
     dv_type = pa.struct([(n, getattr(pa, tp)()) for n, tp in _DV_PA_FIELDS])
     str_map = pa.map_(pa.string(), pa.string())

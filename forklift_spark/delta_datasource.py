@@ -26,7 +26,6 @@ dataChange).
 
 from __future__ import annotations
 
-import json
 import os
 
 from forklift_spark.datasource import (
@@ -49,18 +48,14 @@ def _table(options):
 
 def _snap_or_refuse(t, version):
     """Spark-free snapshot replay: JSON commits only. A table whose
-    replay would need a parquet checkpoint (cleaned log) cannot be
-    planned in the DataSource worker — refuse loudly."""
-    versions = set(t.versions())
-    target = max(versions) if version is None else int(version)
-    json_covers = all(v in versions for v in range(0, target + 1))
-    # snapshot() prefers the parquet checkpoint when the JSON history
-    # is incomplete OR longer than its JSON-replay cutoff — both need
-    # Spark here, so both refuse
+    replay needs the parquet checkpoint (``DeltaLiteTable.
+    _needs_checkpoint``: a cleaned or long log) cannot be planned in the
+    DataSource worker — refuse loudly."""
+    target = t.latest_version() if version is None else int(version)
     # NOT NotImplementedError: DataSourceReader.partitions() treats
     # that class as the "single partition" protocol signal and would
     # swallow the refusal into a silent empty scan
-    if not json_covers or (t._last_checkpoint() and target + 1 > 512):
+    if t._needs_checkpoint(target):
         raise ValueError(
             f"{t.path}: replaying to version {target} needs the parquet "
             "checkpoint (cleaned or long log) — the deltalite DataSource "
@@ -70,25 +65,14 @@ def _snap_or_refuse(t, version):
     return t.snapshot(target)
 
 
-def _cm_maps(snap) -> tuple[dict | None, list[str], dict]:
-    """columnMapping support for the Arrow leaf: ``(phys, pcols_logical,
-    pv_key)`` — logical->physical data-column names (None when names
-    match), the partition columns under their LOGICAL names, and
-    logical->pv-dict key (the spec tracks partitionValues by PHYSICAL
-    name). Nested struct fields under column mapping refuse to the full
-    reader — the flat rename here cannot reach them."""
+def _cm_maps(snap):
+    """The Arrow leaf's view of the one column-mapping resolution
+    (``deltalite._layout``): the leaf renames flat columns only
+    (``_layout(snap).phys``), so nested struct fields under column
+    mapping refuse to the full reader."""
     from pyspark.sql import types as T
 
-    from forklift_spark.connections.deltalite import (
-        _CM_PHYS,
-        _cm_phys_name,
-    )
-
-    schema = snap["schema"]
-    pcols = list(snap.get("partition_columns") or [])
-    cm = snap.get("cm_mode", "none")
-    if cm == "none":
-        return None, pcols, {c: c for c in pcols}
+    from forklift_spark.connections.deltalite import _layout
 
     def _has_struct(dt) -> bool:
         if isinstance(dt, T.StructType):
@@ -99,28 +83,12 @@ def _cm_maps(snap) -> tuple[dict | None, list[str], dict]:
             return _has_struct(dt.valueType)
         return False
 
-    if any(_has_struct(f.dataType) for f in schema.fields):
+    if snap.get("cm_mode", "none") != "none" and any(
+            _has_struct(f.dataType) for f in snap["schema"].fields):
         raise ValueError(
             "deltalite DataSource: columnMapping over nested struct "
             "fields is not supported here — use DeltaLiteTable.read()")
-    phys = {f.name: _cm_phys_name(f, f.name) for f in schema.fields}
-    by_phys = {(f.metadata or {}).get(_CM_PHYS): f.name
-               for f in schema.fields}
-    logical = set(schema.fieldNames())
-    out_pcols, pv_key = [], {}
-    for c in pcols:
-        lc = c if c in logical else by_phys.get(c)
-        if lc is None:
-            raise ValueError(
-                f"columnMapping: partition column {c!r} matches "
-                "neither a logical field name nor any physicalName")
-        out_pcols.append(lc)
-        pv_key[lc] = phys[lc]
-    return phys, out_pcols, pv_key
-
-
-def _pv_logical(pv: dict, pcols: list[str], pv_key: dict) -> dict:
-    return {c: pv.get(pv_key.get(c, c), pv.get(c)) for c in pcols}
+    return _layout(snap)
 
 
 def _dv_sets(t, files: dict) -> dict[str, frozenset]:
@@ -143,11 +111,10 @@ class _DeltaScan:
         return _table(self._options)
 
     def _part(self, t, path, e, **kw) -> _FilePart:
-        phys, pcols, pv_key = self._cm
         return _FilePart(
             os.path.join(t.path, path), nbytes=e.get("size") or 0,
-            pv=_pv_logical(e.get("pv") or {}, pcols, pv_key), phys=phys,
-            schema_json=self._schema_json, **kw)
+            pv=self._cm.partition_values(e.get("pv") or {}),
+            phys=self._cm.phys, schema_json=self._schema_json, **kw)
 
 
 class _DeltaBatchReader(_DeltaScan, _BatchReader):
@@ -189,30 +156,16 @@ class _DeltaStreamReader(_DeltaScan, _StreamReader):
         return _snap_or_refuse(t, lo)["files"] if lo >= 0 else {}
 
     def _step(self, t, before: dict, v: int):
-        adds, removes, data_change = [], [], False
-        fp = os.path.join(t.log_dir, f"{v:020d}.json")
-        if not os.path.exists(fp):
+        from forklift_spark.connections.deltalite import _file_actions
+
+        try:
+            adds, removes = _file_actions(t._read_commit(v)[0])
+        except FileNotFoundError as e:
             raise ValueError(
-                f"{t.path}: commit {v} is missing (log cleaned?); the "
-                "change feed cannot be reconstructed — restart the "
-                "stream with a fresh checkpoint or a retained "
-                "starting_version")
-        with open(fp) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line)
-                if "add" in act:
-                    adds.append(act["add"])
-                    if act["add"].get("dataChange", True):
-                        data_change = True
-                elif "remove" in act:
-                    removes.append(act["remove"])
-                    if act["remove"].get("dataChange", True):
-                        data_change = True
-                elif "protocol" in act:
-                    t._check_protocol(act["protocol"])
+                f"{t.path}: {e}; the change feed cannot be reconstructed "
+                "— restart the stream with a fresh checkpoint or a "
+                "retained starting_version") from None
+        data_change = any(a.get("dataChange", True) for a in adds + removes)
         after = dict(before)
         t._reconcile_commit(after, adds, removes)
         if not data_change:

@@ -1999,7 +1999,8 @@ class ManifestTable:
         out: list[tuple[str, object]] = []
         for k in pk:
             key = zonemap.key_of(tmap.get(k))
-            if key in (float, str) and zonemap.key_of(smap.get(k)) is key:
+            if key in (float, zonemap.key_of(T.StringType())) \
+                    and zonemap.key_of(smap.get(k)) is key:
                 out.append((k, key))
         return out
 
@@ -2470,28 +2471,23 @@ class ManifestTable:
                 # membership comes from each pair row's own dv dir —
                 # extracted from the file path the same way _file_ref
                 # works, the writer's naming being dv/dv-<hex12>
-                # (_apply_dv) — with per-dir tagged reads as the
-                # no-naming-assumption fallback.
-                if all(_DV_DIR_PAT.fullmatch(d) for d in all_dirs):
-                    raw = self.spark.read.schema(_DV_SCHEMA).parquet(
-                        *[os.path.join(self.path, d) for d in all_dirs]
-                    ).select(
-                        "file_ref",
-                        "pos",
-                        F.regexp_extract(
-                            F.col("_metadata.file_path"), DV_DIR_RE, 1
-                        ).alias("__dvdir"),
-                    )
-                else:
-                    parts = [
-                        self.spark.read.schema(_DV_SCHEMA)
-                        .parquet(os.path.join(self.path, d))
-                        .select("file_ref", "pos", F.lit(d).alias("__dvdir"))
-                        for d in all_dirs
-                    ]
-                    raw = parts[0]
-                    for p_ in parts[1:]:
-                        raw = raw.unionByName(p_)
+                # (_apply_dv); a dir named otherwise would tag no rows,
+                # so it refuses instead.
+                for d in all_dirs:
+                    if not _DV_DIR_PAT.fullmatch(d):
+                        raise ValueError(
+                            f"{self.path}: dv dir {d!r} does not match "
+                            "the writer's dv/dv-<hex12> naming; its "
+                            "positions cannot be tagged by side")
+                raw = self.spark.read.schema(_DV_SCHEMA).parquet(
+                    *[os.path.join(self.path, d) for d in all_dirs]
+                ).select(
+                    "file_ref",
+                    "pos",
+                    F.regexp_extract(
+                        F.col("_metadata.file_path"), DV_DIR_RE, 1
+                    ).alias("__dvdir"),
+                )
                 # restrict to the CHANGED files' rows before aggregating
                 # (ADVICE r8 medium): a merged dv dir is shared by every
                 # file hit in its commit, so ride-along pairs of files

@@ -18,9 +18,11 @@ drops a file only when its recorded range provably misses the bound,
   ``TimestampNTZType`` as naive UTC ``datetime``, where a ``datetime``
   is taken as is, a tz-aware one converted to UTC, and a string goes
   through ``datetime.fromisoformat`` (a ``' '`` or ``'T'`` separator,
-  an optional ``Z`` or offset); ``StringType`` as ``str``. A type
-  without a key, or a value the key cannot convert, leaves the column
-  unpruned (Iceberg's "residual filter only");
+  an optional ``Z`` or offset); ``StringType`` as ``str``, taking a
+  ``str`` only (Spark compares a string column with a number by casting
+  the string, which text order cannot follow). A type without a key,
+  or a value the key cannot convert, leaves the column unpruned
+  (Iceberg's "residual filter only");
 - Delta writers store timestamp stats truncated to milliseconds, so
   the Delta reader widens a timestamp max by ``MS`` before the test, as
   delta-spark's data skipping does.
@@ -71,6 +73,12 @@ def _date(v) -> _dt.date:
     raise TypeError(f"not a date: {v!r}")
 
 
+def _string(v) -> str:
+    if not isinstance(v, str):
+        raise TypeError(f"not a string: {v!r}")
+    return v
+
+
 def key_of(dtype):
     """The comparison key of a Spark type, or ``None`` when the type
     does not prune."""
@@ -81,7 +89,7 @@ def key_of(dtype):
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         return _timestamp
     if isinstance(dtype, T.StringType):
-        return str
+        return _string
     return None
 
 

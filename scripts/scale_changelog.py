@@ -9,7 +9,9 @@ data file each), sync to BOTH formats, apply ONE single-key dv-merge,
 sync again, then time `changelog(v0, v1)` end-to-end (count() the
 feed) and record the planner's own scan-set stats. If the changelog
 were O(table), wall time and scan counts would grow with N; the claim
-is they stay flat while a FULL-table read grows.
+is they stay flat while a FULL-table read grows. The Delta export's
+`change_feed(0, 1)` (the CDF read of the same commit) is timed beside
+it.
 
 Prints the result as one JSON object on stdout (SCALE_CHANGELOG_r8.json
 at the repo root holds a recorded run). Run on a quiet box:
@@ -58,7 +60,8 @@ def main() -> None:
     spark = get_spark()
     out = {"rungs": [], "rows_per_partition": ROWS_PER_PART,
            "method": "one single-key dv-merge between two syncs; "
-                     "changelog(v0,v1).count() median-of-3; scan-set "
+                     "changelog(v0,v1).count() and Delta "
+                     "change_feed(0,1).count() median-of-3; scan-set "
                      "stats from last_changelog_stats"}
     for n in RUNGS:
         root = tempfile.mkdtemp(prefix=f"fk_chlog_scale_{n}_")
@@ -83,12 +86,14 @@ def main() -> None:
             dt = DeltaLiteTable(spark, ddest)
             it = IcebergLiteTable(spark, idest)
             d_t = _median3(lambda: dt.changelog(0, 1).count())
+            cf_t = _median3(lambda: dt.change_feed(0, 1).count())
             i_t = _median3(lambda: it.changelog(1, 2).count())
             full_t = _median3(lambda: dt.read().count())
             rung = {
                 "n_files": n,
                 "delta_changelog_s": round(d_t, 4),
                 "delta_scanned": dict(dt.last_changelog_stats),
+                "delta_change_feed_s": round(cf_t, 4),
                 "iceberg_changelog_s": round(i_t, 4),
                 "iceberg_scanned": {
                     k: v for k, v in it.last_changelog_stats.items()},

@@ -206,3 +206,20 @@ def test_delta_timestamp_max_widened_by_one_ms(spark, tmp_path):
     later = row_ts + dt.timedelta(milliseconds=2)
     assert t.read(where={"ts": (later, None)}).count() == 0
     assert t.last_read_stats["files_planned"] == 0
+
+
+def test_number_bound_on_string_column_keeps_files(spark, tmp_path):
+    """A string column holding "10" and "20" in one file: Spark's filter
+    ``s >= 9`` casts the strings and keeps both rows, while comparing
+    the bound as text ("20" < "9") would skip the file. The string key
+    takes a ``str`` only, so a number bound leaves the column unpruned."""
+    m = ManifestTable(spark, str(tmp_path / "m"), "s")
+    m.create(spark.createDataFrame([("10",), ("20",)], "s string")
+             .repartition(1))
+    sync_manifest_to_delta(m, str(tmp_path / "delta"))
+    sync_manifest_to_iceberg(m, str(tmp_path / "ice"))
+    for t in (m, DeltaLiteTable(spark, str(tmp_path / "delta")),
+              IcebergLiteTable(spark, str(tmp_path / "ice"))):
+        assert t.read().filter("s >= 9").count() == 2
+        assert t.read(where={"s": (9, None)}).count() == 2, type(t)
+        assert t.read(where={"s": ("15", None)}).count() == 1, type(t)
